@@ -37,11 +37,6 @@ object Verify {
         System.err.println(s"[verify] $name failed: ${e.getMessage}")
         failed(name) = s"${e.getClass.getSimpleName}: ${Option(e.getMessage).getOrElse("")}".take(300)
       }
-      // the dedup-family queries register cached candidate intermediates
-      // (the freeCandidateCaches contract); free per query like Bench's
-      // clearCache so a 78-query run doesn't accumulate 7+ exploded
-      // shingle tables in executor storage
-      graft.dedup.Dedup.freeCandidateCaches(spark)
     }
     // JSON string escape: backslash, quote, and ALL control chars (<0x20)
     // — a tab or CR in builder-authored SQL would otherwise make the

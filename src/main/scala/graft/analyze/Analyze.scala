@@ -246,15 +246,4 @@ object Analyze {
     }
     df.select(cols: _*)
   }
-
-  /** Row-validity predicate: NOT NULL columns must be present after casting
-    * (reference surfaces these as per-row insert errors, C3). */
-  def validityPredicate(types: Seq[(String, InferredType)], notNull: Seq[String]): Column =
-    notNull.foldLeft(lit(true)) { (acc, name) =>
-      types.find(_._1 == name) match {
-        case Some((_, t)) => acc && castColumn(
-          when(isAbsent(col(name)), lit(null)).otherwise(col(name)), t).isNotNull
-        case None => acc
-      }
-    }
 }

@@ -1,6 +1,6 @@
 package graft.dedup
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import graft.text.TextAnalysis
 
@@ -14,87 +14,6 @@ import graft.text.TextAnalysis
   * 100 TB.
   */
 object Dedup {
-
-  // --- candidate-cache lifecycle ------------------------------------------
-
-  /** The pair-candidate builders ([[overlapTable]], [[minhashLshPairs]],
-    * [[simhashPairs]]) each cache one large exploded intermediate that
-    * feeds several branches of the ONE job that consumes the returned
-    * (lazy) plan. The builder cannot know when that job has run, so each
-    * such cache is registered here per session and freed by the caller
-    * once the consuming action completes — the same storage discipline
-    * [[clusterPairs]] applies internally to its per-round checkpoints,
-    * surfaced as an explicit API because these plans are lazy. Without a
-    * free, a long-lived session running many dedup calls accumulates
-    * executor storage until LRU eviction pressure; `spark.catalog
-    * .clearCache()` also clears these (it empties the whole CacheManager). */
-  private val candidateCaches =
-    new java.util.concurrent.ConcurrentHashMap[SparkSession, java.util.Queue[DataFrame]]()
-
-  /** Test probe: number of sessions currently holding a registry entry.
-    * [[freeCandidateCaches]] must leave this at zero for a drained session
-    * — the entry-retention leak this asserts against is driver-side and
-    * invisible to the storage-level checks the specs otherwise use. */
-  private[graft] def trackedCacheSessions: Int = candidateCaches.size()
-
-  private def cacheTracked(df: DataFrame): DataFrame = {
-    // graft.cache.shared gates the cache, DEFAULT FALSE since r18: the
-    // self-join's two sides already share ONE exchange via ReuseExchange,
-    // so the cache only deduplicates the sizes/blacklist branches' extra
-    // kernel passes — parallel work — while costing a serialized cache
-    // population plus re-reads. The one-JVM interleaved A/B
-    // (graft.AbEager conf=graft.cache.shared, 7 reps, sf0.1) measured
-    // uncached faster on every builder: q19 1.34 vs 1.71 s, q60 3.58 vs
-    // 5.91 s, q22 0.79 vs 0.95 s, q21 0.50 vs 0.55 s, q58 a wash. The
-    // knob remains for memory-rich saturated clusters where duplicate
-    // kernel passes cost real capacity.
-    if (!df.sparkSession.conf.getOption("graft.cache.shared")
-        .exists(_.toBoolean)) return df
-    val cached = df.cache()
-    // The add runs inside compute() so it is atomic with freeCandidateCaches'
-    // removal of a drained entry (ConcurrentHashMap serializes remapping
-    // functions per key): a racing register either lands before the drain
-    // (freed now) or re-creates the entry after removal (freed next call) —
-    // it can never strand a cached plan in a discarded queue.
-    candidateCaches.compute(cached.sparkSession, (_, q0) => {
-      val q = if (q0 == null)
-        new java.util.concurrent.ConcurrentLinkedQueue[DataFrame]() else q0
-      // opportunistic sweep: entries something else already uncached
-      // (spark.catalog.clearCache()) hold no storage — drop them so a
-      // clearCache-only session's queue doesn't grow without bound
-      val it = q.iterator()
-      while (it.hasNext)
-        if (it.next().storageLevel == org.apache.spark.storage.StorageLevel.NONE)
-          it.remove()
-      q.add(cached)
-      q
-    })
-    // optional eager materialization (graft.cache.eager, default lazy —
-    // see Relational.eagerPin for the measured A/B): racing consumer
-    // stages CAN duplicate the kernel pass against a lazy cache
-    // (profiled on q60: 4x), but that waste is parallel, and the serial
-    // pinning pass measured slower at both 32 and 8 cores
-    graft.ops.Relational.eagerPin(cached)
-    cached
-  }
-
-  /** Unpersist every intermediate cached by a pair-candidate builder on
-    * this session since the last call, and REMOVE the session's registry
-    * entry once drained (returning null from computeIfPresent) — so a
-    * stopped session's key, queue, and plan references are not retained
-    * for the JVM lifetime in long-lived multi-session drivers. Safe at any
-    * point: an unpersisted intermediate recomputes if its plan is consumed
-    * again. Registration and drain serialize on the map entry (both run
-    * under compute*), so a concurrent builder can never strand its plan in
-    * a removed queue. The per-key lock is held across the unpersist calls;
-    * contention is only with this session's own builders, and driver-side
-    * unpersist(blocking=false) is cheap. */
-  def freeCandidateCaches(spark: SparkSession, blocking: Boolean = false): Unit =
-    candidateCaches.computeIfPresent(spark, (_, q) => {
-      var df = q.poll()
-      while (df != null) { df.unpersist(blocking); df = q.poll() }
-      null // drained: drop the entry so the session key is not retained
-    })
 
   // --- exact -------------------------------------------------------------
 
@@ -235,8 +154,15 @@ object Dedup {
       k: Int, maxDf: Option[Int]): DataFrame = {
     pairEngineRuns.incrementAndGet()
     // the shingle table feeds three plan branches (both join sides + the
-    // size agg) — materialize it once; registered for freeCandidateCaches
-    val shAll = cacheTracked(shingleTable(df, idCol, textCol, k))
+    // size agg) and is NOT cached: the self-join's two sides share ONE
+    // exchange via ReuseExchange, so a cache would only deduplicate the
+    // size/blacklist branches' parallel kernel passes while costing a
+    // serialized population plus re-reads. A one-JVM interleaved A/B
+    // (7 reps, sf0.1) measured uncached faster on every builder: q19 1.34
+    // vs 1.71 s, q60 3.58 vs 5.91 s, q22 0.79 vs 0.95 s, q21 0.50 vs 0.55 s;
+    // q68 at 4 cores favoured the cache by 5-8% in three runs, each inside
+    // the arms' interquartile spread.
+    val shAll = shingleTable(df, idCol, textCol, k)
     val sh = maxDf match {
       case None => shAll
       case Some(cap) =>
@@ -283,8 +209,8 @@ object Dedup {
     require(numHashes % bands == 0, "bands must divide numHashes")
     val rows = numHashes / bands
     // feeds the band explode + both candidate re-attach branches;
-    // registered for freeCandidateCaches
-    val sig = cacheTracked(minhashSignatures(df, idCol, textCol, k, numHashes))
+    // uncached for the reason overlapTable gives (measured on q19)
+    val sig = minhashSignatures(df, idCol, textCol, k, numHashes)
     // band rows are (doc, band, band_hash) ONLY — the 32-long signature
     // array does not ride the band shuffle; it re-attaches after the pair
     // space has collapsed to deduped candidates.
@@ -352,8 +278,8 @@ object Dedup {
     val nBands = maxDist + 1
     val width = 64 / nBands
     // feeds both sides of the band self-join (and the blacklist agg when
-    // capped); registered for freeCandidateCaches
-    val sh = cacheTracked(simhash(df, idCol, textCol))
+    // capped); uncached for the reason overlapTable gives (measured on q22)
+    val sh = simhash(df, idCol, textCol)
     val banded = sh.select(col("doc"), col("simhash"),
       posexplode(array((0 until nBands).map(b =>
         shiftrightunsigned(col("simhash"), b * width)
@@ -553,11 +479,11 @@ object Dedup {
       .join(test.select(md5(col(textCol)).as("__h")).distinct(), "__h")
       .select(col("doc")).distinct()
       .withColumn("reason", lit("exact"))
-    // trSh feeds both the overlap join and the sizes agg — cached (and
-    // eagerly pinned by cacheTracked) so the shingle kernel runs once,
-    // not once per consumer branch; freed via freeCandidateCaches like
-    // the other builders' intermediates
-    val trSh = cacheTracked(shingleTable(train, idCol, textCol, k))
+    // trSh feeds both the overlap join and the sizes agg — uncached: the
+    // duplicate shingle pass is parallel work, and caching it (a serialized
+    // population plus re-reads) measured a wash on q58 in the interleaved
+    // A/B that found it a loss on every other builder (see overlapTable)
+    val trSh = shingleTable(train, idCol, textCol, k)
     val teSh = shingleTable(test, idCol, textCol, k)
       .withColumnRenamed("doc", "tdoc")
     val sizes = trSh.groupBy(col("doc")).agg(count(lit(1)).as("n_sh"))

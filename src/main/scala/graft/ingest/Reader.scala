@@ -47,45 +47,16 @@ object Reader {
   }
 
   /** Stable per-row ordinal in file order — the vehicle for last-wins dedup
-    * (SURVEY §2 F4) and row-numbered error logs.
-    *
-    * Fast path: formats exposing the `_metadata.row_index` metadata column
-    * (parquet; CSV/JSON do not, measured on this Spark) get a plan-native
-    * projection — no RDD round-trip, codegen stays intact. Guarded to
-    * single-file scans because row_index restarts per file, while the
-    * contract here is a file-order ordinal.
-    *
-    * Fallback: zipWithIndex assigns contiguous ordinals across partitions
-    * in partition order, which for a single-file narrow read IS file
-    * order; costs one extra narrow pass, no shuffle. */
+    * (SURVEY §2 F4) and row-numbered error logs. zipWithIndex assigns
+    * contiguous ordinals across partitions in partition order, which for a
+    * single-file narrow read IS file order; costs one extra narrow pass, no
+    * shuffle. (CSV and JSON scans expose no `_metadata.row_index`, so there
+    * is no plan-native form for the formats [[read]] yields.) */
   def withRowIndex(df: DataFrame, colName: String = "_row_idx"): DataFrame = {
-    // Fast-path decision WITHOUT a failing analysis: `_metadata` resolves
-    // cleanly for EVERY file source (its field set varies by format), so
-    // probing its struct schema for `row_index` never throws on the common
-    // paths. The previous probe analyzed `_metadata.row_index` directly and
-    // caught the AnalysisException — but failed analyses are also delivered
-    // to QueryExecutionListeners (e.g. Spark's Observation helper), which
-    // rethrow, spamming `ERROR ExecutionListenerBus FIELD_NOT_FOUND` into
-    // otherwise-green logs on every CSV/JSON load.
-    val fastPath: Boolean =
-      df.inputFiles.length == 1 && (try {
-        df.select(col("_metadata")).schema.headOption.exists(_.dataType match {
-          case s: org.apache.spark.sql.types.StructType =>
-            s.fieldNames.contains("row_index")
-          case _ => false
-        })
-      } catch {
-        // non-file relation (no _metadata at all) — fallback below
-        case _: org.apache.spark.sql.AnalysisException => false
-      })
-    if (fastPath) df.withColumn(colName, col("_metadata.row_index"))
-    else {
-      val schema = df.schema
-      val withIdx = df.rdd.zipWithIndex.map { case (row, idx) =>
-        org.apache.spark.sql.Row.fromSeq(row.toSeq :+ idx)
-      }
-      df.sparkSession.createDataFrame(withIdx,
-        schema.add(colName, org.apache.spark.sql.types.LongType, nullable = false))
+    val withIdx = df.rdd.zipWithIndex.map { case (row, idx) =>
+      org.apache.spark.sql.Row.fromSeq(row.toSeq :+ idx)
     }
+    df.sparkSession.createDataFrame(withIdx,
+      df.schema.add(colName, org.apache.spark.sql.types.LongType, nullable = false))
   }
 }

@@ -19,8 +19,6 @@ import org.apache.spark.sql.expressions.Window
   */
 object Upsert {
 
-  final case class MergeCounts(inserted: Long, updated: Long, kept: Long)
-
   /** Deduplicate the source on `pk`, keeping the row with the highest
     * `ordinalCol` (file order). */
   def dedupLastWins(source: DataFrame, pk: Seq[String], ordinalCol: String): DataFrame = {
@@ -99,16 +97,5 @@ object Upsert {
       .otherwise(lit("changed"))
     o.join(n, pk, "full_outer")
       .select(pk.map(col) :+ change.as("change"): _*)
-  }
-
-  /** Count merge actions with one agg over the (already materialized)
-    * merged table. */
-  def counts(merged: DataFrame): MergeCounts = {
-    val r = merged.agg(
-      sum(when(col("__merge_action") === "inserted", 1L).otherwise(0L)).as("i"),
-      sum(when(col("__merge_action") === "updated", 1L).otherwise(0L)).as("u"),
-      sum(when(col("__merge_action") === "kept", 1L).otherwise(0L)).as("k")).head()
-    def g(i: Int): Long = Option(r.get(i)).map(_.toString.toLong).getOrElse(0L)
-    MergeCounts(g(0), g(1), g(2))
   }
 }

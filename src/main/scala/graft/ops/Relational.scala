@@ -65,25 +65,6 @@ object Relational {
     }
   }
 
-  /** Optionally materialize a just-persisted frame before its consumers
-    * fan out — gated by `graft.cache.eager`, DEFAULT FALSE. AQE submits
-    * independent consumer subtrees concurrently, and racing stages each
-    * recompute an unmaterialized cache partition (profiled: four full
-    * shingle-kernel passes in one q60 run) — but that duplicate work is
-    * PARALLEL waste, while an eager count() is a SERIAL extra pass that
-    * the first consumer's fused cache-populating stage never pays.
-    * Interleaved one-JVM A/B (graft.AbEager, 7 reps, both 32 and 8
-    * cores) measured lazy faster everywhere: q19 1.32 vs 1.54 s,
-    * q60 4.71 vs 5.21 s, q123 2.01 vs 2.15 s at 32 cores; same ordering
-    * at 8. The knob exists for saturated clusters, where duplicate
-    * compute costs real capacity rather than idle cores. */
-  def eagerPin(df: DataFrame): DataFrame = {
-    if (df.sparkSession.conf.getOption("graft.cache.eager")
-        .exists(_.toBoolean)) { df.count(); () }
-    df
-  }
-
-
   /** Cheap corpus-identity signature for per-JVM memo keys (the r10
     * advice: a memo keyed on `dir` alone silently serves stale state when
     * a corpus at the same path is rewritten within one JVM — real for

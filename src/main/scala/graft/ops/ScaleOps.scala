@@ -236,8 +236,8 @@ object ScaleOps {
     Relational.fanOut(t(s, dir, "documents"))
       .select(col("doc_id"), TextAnalysis.tokens(col("text")).as("tk"))
       // fused one-pass kernel (RepetitionStats); bit-identical to the
-      // split dupTokenFrac+topBigramFrac form — MicroBench r5: 0.217s vs
-      // 0.230s median at sf0.1
+      // split dupTokenFrac+topBigramFrac form — an interleaved r5 A/B:
+      // 0.217s vs 0.230s median at sf0.1
       .withColumn("__rep", TextAnalysis.repetitionStatsOf(col("tk")))
       .select(
         col("doc_id"),

@@ -46,7 +46,7 @@ object ScaleOps10 {
     * naive global form and the integers agree. */
   def q123Concurrency(s: SparkSession, dir: String): DataFrame = {
     // sessions deliberately NOT cached: the r18 one-JVM interleaved A/B
-    // (graft.AbEager, 7 reps) measured the cached form 2.62 s vs 1.50 s
+    // (7 reps) measured the cached form 2.62 s vs 1.50 s
     // uncached — the branch re-runs of the sessionize chain are parallel
     // and share the user-keyed exchange via ReuseExchange, while the
     // cache serializes its population and re-reads

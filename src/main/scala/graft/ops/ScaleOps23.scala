@@ -178,8 +178,8 @@ object ScaleOps23 {
     // cached in the r18 one-JVM A/B (2.26 s vs 2.72 s uncached, 7
     // interleaved reps) — the 8-token sliding window is the heaviest
     // kernel on the surface, so deduplicating its extra pass beats the
-    // cache overhead here; population stays lazy (eagerPin default off)
-    Relational.eagerPin(pairs)
+    // cache overhead here; population stays lazy (an eager count() pass
+    // lost to lazy population on every query the r18 A/B measured it on)
     val perSrc = pairs.groupBy(col("source")).agg(count(lit(1)).as("n_types"))
     val shared = pairs.as("a")
       .join(pairs.as("b"), col("a.h") === col("b.h")

@@ -88,9 +88,9 @@ object ScaleOps25 {
     val w = Array.fill(Q176Buckets + 1)(0L)
     val cached = feats.repartition(col("doc_id")).persist()
     // the first epoch's job reads cached from TWO branches (margin join
-    // + misclassified re-join); pinning is the measured-lazy eagerPin
-    // routing
-    Relational.eagerPin(cached)
+    // + misclassified re-join); population stays lazy — an eager count()
+    // pass lost to lazy population on every query the r18 A/B measured it
+    // on (q19, q60, q123)
     try {
       for (_ <- 1 to Q176Epochs) {
         val wDf = w.zipWithIndex

@@ -46,7 +46,7 @@ object ScaleOps7 {
   def q96Pagerank(s: SparkSession, dir: String): DataFrame = {
     // pairs deliberately NOT persisted since r18: the union sides share
     // the distinct's exchange via ReuseExchange, and the one-JVM
-    // interleaved A/B (graft.AbEager, 7 reps) measured the r9-r17
+    // interleaved A/B (7 reps) measured the r9-r17
     // persisted form 4.33 s vs 3.30 s without it — cache population
     // serialized what the exchange reuse already deduplicates
     val pairs = Relational.fanOut(t(s, dir, "lineitem"))

@@ -59,13 +59,18 @@ object ProcessFile {
     val types = inferred.map { case (p, t, _) => (p.name, t) }
     val ddl = Ddl.render(table, inferred.map { case (p, t, n) => (p.name, t, n) })
 
+    // ONE cast-and-split feeds both the load and the error log. Lazy so
+    // that it is first built inside the try below, after prepareTable:
+    // zipWithIndex runs a job on multi-partition reads, and a failure there
+    // is a load failure like any other.
+    lazy val (good, bad) = Loader.split(
+      Analyze.castPlan(Reader.withRowIndex(raw),
+        types :+ ("_row_idx" -> InferredType.BigIntType)),
+      notNull)
+
     val result =
       try {
         Loader.prepareTable(spark, table, config.tableMode, sink)
-        val indexed = Reader.withRowIndex(raw)
-        val casted = Analyze.castPlan(indexed,
-          types :+ ("_row_idx" -> InferredType.BigIntType))
-        val (good, bad) = Loader.split(casted, notNull)
         val strict = config.transactionMode == TransactionMode.Strict
         config.tableMode match {
           case TableMode.Upsert =>
@@ -82,15 +87,8 @@ object ProcessFile {
           LoadResult("Failed", -1, 0, 0, -1, Some(e.getMessage))
       }
 
-    val badForLog =
-      if (result.rowsErrored > 0) {
-        val indexed = Reader.withRowIndex(raw)
-        val casted = Analyze.castPlan(indexed, types :+ ("_row_idx" -> InferredType.BigIntType))
-        Some(Loader.split(casted, notNull)._2)
-      } else None
-
-    finish(spark, filePath, jobRunId, table, start, result, config, batchJobId, badForLog,
-      moveOnFailure)
+    finish(spark, filePath, jobRunId, table, start, result, config, batchJobId,
+      if (result.rowsErrored > 0) Some(bad) else None, moveOnFailure)
     FileJob(jobRunId, filePath, table, result, ddl)
   }
 
@@ -166,7 +164,12 @@ object ProcessFile {
         try out.write((lines.mkString("\n") + "\n").getBytes("UTF-8"))
         finally out.close()
       }
-    } catch { case _: Exception => () } // logging must never fail the job
+    } catch {
+      // the per-file log must never fail the job, but its loss is reported
+      case e: Exception =>
+        org.slf4j.LoggerFactory.getLogger(getClass).warn(
+          s"per-file log not written for job_run_id=$jobRunId file=$filePath", e)
+    }
 
   private def moveTargetDir(spark: SparkSession, filePath: String, sub: String)
       : Option[String] = {

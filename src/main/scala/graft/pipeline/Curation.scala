@@ -56,13 +56,7 @@ object Curation {
       maxTopBigramFrac = 0.3)
   }
 
-  /** Curated corpus: one row per surviving document with its metrics.
-    *
-    * Storage note: with `nearDupThreshold` on, the near-dup stage caches
-    * one exploded shingle intermediate (see [[Dedup.freeCandidateCaches]]);
-    * a long-lived session should free it once the job consuming the
-    * returned plan has run — the composed pipeline runner does this per
-    * stage. */
+  /** Curated corpus: one row per surviving document with its metrics. */
   def curate(docs: DataFrame, idCol: String, textCol: String,
       params: Params = Params()): DataFrame = {
     val exactDeduped = Dedup.exactDedup(docs, idCol, textCol)

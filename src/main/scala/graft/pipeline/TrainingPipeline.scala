@@ -353,7 +353,6 @@ object TrainingPipeline {
           cfg.curation.nearDupThreshold.getOrElse(cfg.splitThreshold))
         val p = ckpt(Dedup.nearDupPairs(exactDeduped, idCol, textCol,
           k = 3, threshold = thMin, maxDf = cfg.curation.nearDupMaxDf))
-        Dedup.freeCandidateCaches(spark)
         Some((exactDeduped, p))
       } else None
     val nDocs = if (shared.isDefined) {
@@ -376,7 +375,6 @@ object TrainingPipeline {
         case None => Curation.curate(docs1, idCol, textCol, cfg.curation)
       }).join(docs1.select(col(idCol), col(sourceCol)), Seq(idCol)))
     val nCurated = curated.count()
-    Dedup.freeCandidateCaches(spark) // the near-dup stage's shingle cache
     // the exact-deduped frame fed the graph build and the curation stage;
     // both are materialized now (the pair graph still is not — it serves
     // the split)
@@ -543,10 +541,8 @@ object TrainingPipeline {
     val decontaminated = test match {
       case None => lmMixed
       case Some(te) =>
-        val d = ckpt(Dedup.decontaminate(lmMixed, te, idCol, textCol,
+        ckpt(Dedup.decontaminate(lmMixed, te, idCol, textCol,
           cfg.decontShingleK, cfg.decontThreshold))
-        Dedup.freeCandidateCaches(spark)
-        d
     }
     val nDecont = decontaminated.count()
     if (test.isDefined) free(lmMixed)
@@ -582,7 +578,6 @@ object TrainingPipeline {
       clusters.withColumn("split", Relational3.splitAssign(col("cluster_id"))),
       Seq(idCol)))
     val nSplit = split.count()
-    Dedup.freeCandidateCaches(spark)
     shared.foreach { case (_, p) => free(p) }
     free(mixed)
     record("split", nMixed, nSplit, t0)

@@ -22,7 +22,6 @@ class ContractCanarySpec extends GraftSuite {
       try { if (fn(spark, dir).count() == 0L) empties += name }
       catch { case e: Throwable =>
         failures += s"$name: ${e.getClass.getSimpleName}: ${String.valueOf(e.getMessage).take(160)}" }
-      graft.dedup.Dedup.freeCandidateCaches(spark)
     }
     assert(failures.isEmpty, s"queries threw:\n  ${failures.mkString("\n  ")}")
     // Queries allowed to be empty at sf0.001 ONLY — an unexpected empty is

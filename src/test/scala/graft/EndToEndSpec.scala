@@ -138,6 +138,32 @@ class EndToEndSpec extends GraftSuite {
     assert(errs.count() == 1)
   }
 
+  test("tolerant load error log: one etl_job_error row per NOT NULL violation, RowNumber = file-order index") {
+    val dir = tempDir("e2e_errlog")
+    val csv =
+      """id,name
+        |1,a
+        |,b
+        |3,c
+        |,d
+        |5,e
+        |""".stripMargin
+    val f = writeFile(dir, "errlog_table.csv", csv)
+    val c = cfg.copy(transactionMode = TransactionMode.Tolerant,
+      notNullColumns = Map("errlog_table" -> Seq("id")))
+    val job = ProcessFile.run(spark, f, c)
+    assert(job.result.status == "CompletedWithErrors")
+    assert(job.result.rowsInserted == 3 && job.result.rowsErrored == 2)
+    val errs = spark.table(Ledger.JobErrorTable)
+      .filter(col("JobRunID") === job.jobRunId)
+      .select("RowNumber", "RawValue").collect()
+      .map(r => r.getLong(0) -> r.getString(1)).sortBy(_._1).toSeq
+    // data rows 1 and 3 (0-based, header excluded) are the id-less ones
+    assert(errs.map(_._1) == Seq(1L, 3L), errs)
+    assert(errs.map(_._2).zip(Seq("b", "d")).forall { case (raw, n) =>
+      raw.contains(s"\"name\":\"$n\"") }, errs)
+  }
+
   test("batch directory run with checkpoint resume skipping completed files") {
     val dir = tempDir("e2e_batch")
     writeFile(dir, "batch_t1.csv", "name,age,city\nx,1,NY\ny,2,LA\nz,3,SF\n")

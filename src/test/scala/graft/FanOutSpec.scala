@@ -4,9 +4,8 @@ import org.apache.spark.sql.functions._
 import graft.ops.Relational
 import graft.ingest.Reader
 
-/** Pins the metadata-only fanOut guard and the plan-native row-index fast
-  * path (round-3 hygiene: no eager physical planning during query
-  * construction, no RDD round-trips where the format supports better). */
+/** Pins the metadata-only fanOut guard (round-3 hygiene: no eager physical
+  * planning during query construction) and the file-order row index. */
 class FanOutSpec extends GraftSuite {
   import spark.implicits._
 
@@ -37,19 +36,12 @@ class FanOutSpec extends GraftSuite {
     assert(spark.conf.get(key) == "false", "conf leaked after execution")
   }
 
-  test("withRowIndex: parquet single file is plan-native (no RDD scan), CSV falls back") {
+  test("withRowIndex: CSV rows get contiguous file-order ordinals") {
     val dir = tempDir("rowidx")
-    val pq = dir.resolve("p").toString
-    Seq(("a", 1), ("b", 2), ("c", 3)).toDF("s", "v").coalesce(1)
-      .write.mode("overwrite").parquet(pq)
-    val fast = Reader.withRowIndex(spark.read.parquet(pq))
-    val plan = fast.queryExecution.executedPlan.toString
-    assert(!plan.contains("ExistingRDD") && !plan.contains("Scan ExistingRDD"), plan)
-    assert(fast.select("_row_idx").as[Long].collect().sorted.toSeq == Seq(0L, 1L, 2L))
-    // CSV has no row_index metadata column — zipWithIndex fallback, same contract
     val csvPath = writeFile(dir, "f.csv", "s,v\na,1\nb,2\nc,3\n")
     val csv = spark.read.option("header", "true").csv(csvPath)
-    val fb = Reader.withRowIndex(csv)
-    assert(fb.select("_row_idx").as[Long].collect().sorted.toSeq == Seq(0L, 1L, 2L))
+    val idx = Reader.withRowIndex(csv)
+    assert(idx.select("s", "_row_idx").as[(String, Long)].collect().sortBy(_._2).toSeq ==
+      Seq(("a", 0L), ("b", 1L), ("c", 2L)))
   }
 }

@@ -396,7 +396,6 @@ class ScaleOps3Spec extends GraftSuite {
     val viaOneShot = graft.ops.ScaleOps4.dedupSavings(
       docs, oneShot, "source", "doc_id", "text")
     assert(savings.collect().toSeq == viaOneShot.collect().toSeq)
-    graft.dedup.Dedup.freeCandidateCaches(spark)
   }
 
   test("sourceProfile: hand-computed interpolated percentiles per stratum") {

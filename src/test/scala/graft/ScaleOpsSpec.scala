@@ -286,37 +286,6 @@ class DedupSpec extends GraftSuite {
     assert(after - before <= 1, s"persistent RDDs grew $before -> $after")
   }
 
-  test("pair-candidate builder caches are freed by freeCandidateCaches") {
-    spark.catalog.clearCache()
-    Dedup.freeCandidateCaches(spark, blocking = true)
-    val before = spark.sparkContext.getPersistentRDDs.size
-    // the builder cache is opt-in since r18 (graft.cache.shared, default
-    // off — the uncached plan measured faster); this test drills the
-    // cache LIFECYCLE, so it opts in
-    spark.conf.set("graft.cache.shared", "true")
-    try {
-      Dedup.nearDupPairs(docs, "doc_id", "text", k = 3, threshold = 0.5).count()
-      Dedup.containmentPairs(docs, "doc_id", "text", k = 3, threshold = 0.9).count()
-      Dedup.minhashLshPairs(docs, "doc_id", "text", k = 3).count()
-      Dedup.simhashPairs(docs, "doc_id", "text", maxDist = 3, maxBucket = 100).count()
-    } finally spark.conf.unset("graft.cache.shared")
-    val during = spark.sparkContext.getPersistentRDDs.size
-    assert(during > before,
-      s"expected the builders' intermediates to be persisted ($before -> $during)")
-    Dedup.freeCandidateCaches(spark, blocking = true)
-    val after = spark.sparkContext.getPersistentRDDs.size
-    // <= not ==: the ContextCleaner may concurrently collect unrelated
-    // out-of-scope RDDs from earlier tests, dropping the count below the
-    // baseline — what matters is that nothing the builders cached lingers
-    assert(after <= before, s"persistent RDDs linger after free: $before -> $after")
-    // the drained session's REGISTRY ENTRY is removed too — a long-lived
-    // multi-session JVM must not retain stopped sessions' keys/queues/plans
-    assert(Dedup.trackedCacheSessions == 0,
-      s"drained session still tracked (${Dedup.trackedCacheSessions} entries)")
-    // a second free on an already-drained session is a no-op
-    Dedup.freeCandidateCaches(spark, blocking = true)
-  }
-
   test("leakage-safe split: every near-dup cluster lands entirely in one split") {
     val docsReal = spark.read.parquet("/root/testdata/sf0.01/documents.parquet")
     val pairs = Dedup.nearDupPairs(docsReal, "doc_id", "text", k = 3, threshold = 0.5)
