@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 
 /** Driver-run benchmark: times every SparkEntry query at
   * SPARK_GRAFT_SF_DIR and prints ONE JSON line.
@@ -19,34 +18,20 @@ import org.apache.spark.sql.SparkSession
   * artifact arm once at the target SF labeled `"metric":"query_cold"`
   * (the rebuild cost, from a clean root), then run the timed suite —
   * which now measures the WARM mode for every run alike. Both modes
-  * land in the output, separately labeled. SPARK_GRAFT_BENCH_ARTIFACTS
-  * =asis restores the legacy run-against-whatever-the-host-had
-  * behavior. */
+  * land in the output, separately labeled. */
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val warmDir = "/root/testdata/sf0.001"
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Inspect.session()
 
-    val artifactMode = sys.env.getOrElse("SPARK_GRAFT_BENCH_ARTIFACTS", "warm")
-    if (artifactMode != "asis") {
-      def deleteRec(f: java.io.File): Unit = {
-        Option(f.listFiles()).getOrElse(Array.empty).foreach(deleteRec)
-        f.delete(); ()
-      }
-      val tmp = new java.io.File(sys.props("java.io.tmpdir"))
-      Seq("graft_bpe_vocab", "graft_perceptron", "graft_fp_index",
-          "graft_fp_apnd", "graft_bigram_lm", "graft_tertile_bounds")
-        .foreach(d => deleteRec(new java.io.File(tmp, d)))
+    def deleteRec(f: java.io.File): Unit = {
+      Option(f.listFiles()).getOrElse(Array.empty).foreach(deleteRec)
+      f.delete(); ()
     }
+    val tmp = new java.io.File(sys.props("java.io.tmpdir"))
+    Seq("graft_bpe_vocab", "graft_perceptron", "graft_fp_index",
+        "graft_fp_apnd", "graft_bigram_lm", "graft_tertile_bounds")
+      .foreach(d => deleteRec(new java.io.File(tmp, d)))
 
     // SPARK_GRAFT_BENCH_ORDER=reverse runs the suite back-to-front: used
     // for clean re-measurement (run-order/JIT drift shows up as a
@@ -57,7 +42,7 @@ object Bench {
       if (sys.env.get("SPARK_GRAFT_BENCH_ORDER").contains("reverse")) sorted.reverse
       else sorted
     queries.foreach { case (_, fn) =>
-      try fn(spark, warmDir).count() catch { case _: Throwable => () }
+      try fn(spark, Inspect.WarmDir).count() catch { case _: Throwable => () }
     }
     spark.catalog.clearCache()
 
@@ -86,20 +71,18 @@ object Bench {
     // "query_cold" so window parsers never mix it into the warm
     // medians. Side effect is the point: the artifacts (and their
     // in-JVM memos) are warm when the timed loop reaches them.
-    if (artifactMode != "asis") {
-      SparkEntry.artifactQueries.toSeq.sorted.foreach { name =>
-        SparkEntry.queries.get(name).foreach { fn =>
-          val t0 = System.nanoTime()
-          val outcome = try { fn(spark, sfDir).count(); None }
-                        catch { case e: Throwable => Some(e) }
-          val dt = (System.nanoTime() - t0) / 1e9
-          spark.catalog.clearCache()
-          outcome match {
-            case None => println(
-              s"""{"metric":"query_cold","name":"$name","value":${fmt(dt)},"unit":"sec"}""")
-            case Some(e) => println(
-              s"""{"metric":"query_cold","name":"$name","value":-1,"unit":"sec","err":"${errMsg(e)}"}""")
-          }
+    SparkEntry.artifactQueries.toSeq.sorted.foreach { name =>
+      SparkEntry.queries.get(name).foreach { fn =>
+        val t0 = System.nanoTime()
+        val outcome = try { fn(spark, sfDir).count(); None }
+                      catch { case e: Throwable => Some(e) }
+        val dt = (System.nanoTime() - t0) / 1e9
+        spark.catalog.clearCache()
+        outcome match {
+          case None => println(
+            s"""{"metric":"query_cold","name":"$name","value":${fmt(dt)},"unit":"sec"}""")
+          case Some(e) => println(
+            s"""{"metric":"query_cold","name":"$name","value":-1,"unit":"sec","err":"${errMsg(e)}"}""")
         }
       }
     }

@@ -4,49 +4,36 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.dedup.Dedup
 
-/** Scale-stress harness backing the 100 TB-viability claims with measured
-  * evidence instead of plan reading alone. Three modes:
+/** Stress modes that measure BOTH arms of a routing the engine still
+  * carries, or check an oracle precondition, on synthetic or
+  * `StressGen` corpora. Scaling curves of registered queries live in
+  * `Inspect curve`. Modes:
   *
-  *  - (default) `<dir>`: legacy fact-table mode — times the lineitem-heavy
-  *    queries on an N-times-replicated copy (multi-row-group) and prints
-  *    seconds per query.
-  *  - `curve <base> [reps]`: 3-point scaling curves (1×/3×/10× corpora
-  *    from [[StressGen]]) for the near-dup/ANN layer — capped Jaccard,
-  *    MinHash LSH, SimHash, embedding near-dup, IVF search over the
-  *    persisted partitioned index — and prints the fitted exponent of
-  *    t ∝ n^e per op (least squares over the 3 points). The corpora are
-  *    token-mutated per replica, so this is the "new data" scaling shape.
   *  - `skew <base>`: the boilerplate-skew adversarial case — one sentence
   *    shared by ~30% of documents. Prints the candidate-pair space
   *    Σ df·(df−1)/2 with and without the df cap (the uncapped number is
   *    the join size a production run would have to materialize) and times
   *    the CAPPED production path ([[Dedup.nearDupPairs]]) at 1× and 10×,
   *    plus the uncapped path at 1× for contrast.
+  *  - `snmskew <base> [nDocs]`: q148's sorted-neighborhood blocking,
+  *    windowed vs rank-join, on a one-hot-key corpus.
   *  - `packskew <base> [nDocs]`: the one-dominant-source packing corpus —
-  *    differential + balance evidence for the r12 hierarchical prefix
-  *    sum ([[graft.pipeline.Packing.packAssignmentsByCount]]). */
+  *    differential + balance evidence for the hierarchical prefix sum
+  *    ([[graft.pipeline.Packing.packAssignmentsByCount]]).
+  *  - `tert <base> [nDocs]`: q179's tertile boundaries, exact vs
+  *    histogram route, on a 95%-one-language corpus.
+  *  - `bpebatch <dir> [merges]`: sequential vs batched BPE training.
+  *  - `apnd <base> [nDocs]`: fingerprint-index append vs rebuild.
+  *  - `audit <sfDir>`: hash-collision and whitespace preconditions of the
+  *    hash-mirrored oracle queries. */
 object ScaleStress {
-
-  private def session(): SparkSession = {
-    val spark = SparkSession.builder().master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    spark
-  }
-
-  private def time(f: => Long): (Double, Long) = {
-    val t0 = System.nanoTime()
-    val n = f
-    ((System.nanoTime() - t0) / 1e9, n)
-  }
 
   /** Median-of-reps wall time plus the (stable) result count. */
   private def timed(spark: SparkSession, reps: Int)(f: => Long): (Double, Long) = {
     val runs = (1 to reps).map { _ =>
-      val r = time(f)
+      val t0 = System.nanoTime()
+      val n = f
+      val r = ((System.nanoTime() - t0) / 1e9, n)
       spark.catalog.clearCache()
       r
     }
@@ -54,127 +41,27 @@ object ScaleStress {
   }
 
   def main(args: Array[String]): Unit = args.headOption match {
-    case Some("curve") => curve(args.lift(1).getOrElse("/tmp/stress_r5"),
-      args.lift(2).map(_.toInt).getOrElse(3), args.lift(3))
     case Some("skew") => skew(args.lift(1).getOrElse("/tmp/stress_r5"))
     case Some("audit") => audit(args.lift(1).getOrElse("/root/testdata/sf0.1"))
-    case Some("single") => single(args(1),
-      args.lift(2).getOrElse("/root/testdata/sf0.1"),
-      args.lift(3).map(_.toInt).getOrElse(5))
-    case Some("pipeline") => pipelineStress(args.lift(1).getOrElse("/tmp/stress_r6/x100"),
-      reuse = !args.lift(2).contains("noreuse"))
     case Some("snmskew") => snmSkew(args.lift(1).getOrElse("/tmp/stress_snm"),
       args.lift(2).map(_.toInt).getOrElse(120000))
     case Some("packskew") => packSkew(args.lift(1).getOrElse("/tmp/stress_pack"),
       args.lift(2).map(_.toInt).getOrElse(400000))
-    case Some("graphcurve") => graphCurve(args.lift(1).getOrElse("/tmp/stress_facts"),
-      args.lift(2).map(_.toInt).getOrElse(3))
-    case Some("mediacurve") => mediaCurve(args.lift(1).getOrElse("/tmp/stress_facts"),
-      args.lift(2).map(_.toInt).getOrElse(3))
     case Some("bpebatch") => bpeBatch(args.lift(1).getOrElse("/tmp/stress_facts/x10"),
       args.lift(2).map(_.toInt).getOrElse(256))
-    case Some("overlapskew") => overlapSkew(args.lift(1).getOrElse("/tmp/stress_overlap"),
-      args.lift(2).map(_.toInt).getOrElse(400000))
     case Some("apnd") => apnd(args.lift(1).getOrElse("/tmp/stress_apnd"),
       args.lift(2).map(_.toInt).getOrElse(100000))
     case Some("tert") => tert(args.lift(1).getOrElse("/tmp/stress_tert"),
       args.lift(2).map(_.toInt).getOrElse(4000000))
-    case Some("disp") => disp(args.lift(1).getOrElse("/tmp/stress_disp"),
-      args.lift(2).map(_.toInt).getOrElse(4000000))
-    case Some("plx") => plx(args.lift(1).getOrElse("/tmp/stress_plx"),
-      args.lift(2).map(_.toInt).getOrElse(4000000))
-    case Some("clf") => clf(args.lift(1).getOrElse("/tmp/stress_clf"),
-      args.lift(2).map(_.toInt).getOrElse(200000))
-    case _ => facts(args.headOption.getOrElse("/tmp/sfbig"))
-  }
-
-  // --- graph-family curve mode ---------------------------------------------
-
-  /** 4-point scaling curves (x1/x3/x10/x100 FACTS corpora — `StressGen
-    * facts <src> <base>/xN N`) for the graph family: q96 PageRank, q114
-    * triangle counting, q127 BFS — the three heaviest graph ops, whose
-    * edge sets grow superlinearly in basket density (the r9 verdict's
-    * missing-evidence item: the curve discipline sparse_sim/phrase_search
-    * already had, applied to the graph ops). Same least-squares exponent
-    * protocol as `curve`. */
-  def graphCurve(base: String, reps: Int): Unit = {
-    val spark = session()
-    val scales = Seq(1, 3, 10, 100)
-      .filter(n => new java.io.File(s"$base/x$n/lineitem.parquet").exists())
-    require(scales.nonEmpty,
-      s"no facts corpora under $base (expected x1/x3/... with lineitem) — " +
-        "generate with `runMain graft.StressGen facts <src> $base/xN N`")
-    println(s"GRAPHCURVE scales=${scales.mkString(",")}")
-    val qs = Seq("q96_pagerank", "q114_triangles", "q127_bfs_hops")
-    qs.foreach(n => SparkEntry.queries(n)(spark, "/root/testdata/sf0.001").count())
-    spark.catalog.clearCache()
-    val results = for (name <- qs) yield {
-      val pts = scales.map { n =>
-        val (sec, rows) = timed(spark, reps)(
-          SparkEntry.queries(name)(spark, s"$base/x$n").count())
-        println(f"CURVE $name x$n%-3d ${sec}%.2fs rows=$rows")
-        (n.toDouble, sec)
-      }
-      val xs = pts.map(p => math.log(p._1)); val ys = pts.map(p => math.log(p._2))
-      val xm = xs.sum / xs.size; val ym = ys.sum / ys.size
-      val e = xs.zip(ys).map { case (x, y) => (x - xm) * (y - ym) }.sum /
-        xs.map(x => (x - xm) * (x - xm)).sum
-      println(f"CURVE $name exponent=${e}%.2f")
-      name -> e
-    }
-    val worst = results.maxBy(_._2)
-    println(f"CURVE worst ${worst._1} exponent=${worst._2}%.2f")
-    spark.stop()
-  }
-
-  // --- media decode family curve mode --------------------------------------
-
-  /** 4-point scaling curves for the MEDIA DECODE family (the r10
-    * verdict's missing scale-curve evidence, item #6): q149 MJPEG
-    * container walk + per-sample JPEG decode, q154 keyframe lag
-    * windows, q159 WAV silence segmentation, q160 WHT band energies.
-    * All four synthesize their media fixtures per DOCUMENT row (fixture
-    * laws are pure id arithmetic), so a facts corpus's ×n documents IS
-    * ×n media byte volume at constant per-item size — the existing
-    * `StressGen facts` corpora are the media-growth corpora, no
-    * separate generator needed. Decode is a pure map and the windows
-    * are media-keyed (≫ tasks, tiny partitions), so the family should
-    * land at exponent ≈ 1.0 in bytes with no skew term. Same
-    * least-squares protocol as `curve`/`graphcurve`. */
-  def mediaCurve(base: String, reps: Int): Unit = {
-    val spark = session()
-    val scales = Seq(1, 3, 10, 100)
-      .filter(n => new java.io.File(s"$base/x$n/documents.parquet").exists())
-    require(scales.nonEmpty,
-      s"no facts corpora under $base (expected x1/x3/... with documents) — " +
-        "generate with `runMain graft.StressGen facts <src> $base/xN N`")
-    println(s"MEDIACURVE scales=${scales.mkString(",")}")
-    val qs = Seq("q149_mjpeg_frames", "q154_keyframes", "q159_silence",
-      "q160_wht_bands")
-    qs.foreach(n => SparkEntry.queries(n)(spark, "/root/testdata/sf0.001").count())
-    spark.catalog.clearCache()
-    val results = for (name <- qs) yield {
-      val pts = scales.map { n =>
-        val (sec, rows) = timed(spark, reps)(
-          SparkEntry.queries(name)(spark, s"$base/x$n").count())
-        println(f"CURVE $name x$n%-3d ${sec}%.2fs rows=$rows")
-        (n.toDouble, sec)
-      }
-      val xs = pts.map(p => math.log(p._1)); val ys = pts.map(p => math.log(p._2))
-      val xm = xs.sum / xs.size; val ym = ys.sum / ys.size
-      val e = xs.zip(ys).map { case (x, y) => (x - xm) * (y - ym) }.sum /
-        xs.map(x => (x - xm) * (x - xm)).sum
-      println(f"CURVE $name exponent=${e}%.2f")
-      name -> e
-    }
-    val worst = results.maxBy(_._2)
-    println(f"CURVE worst ${worst._1} exponent=${worst._2}%.2f")
-    spark.stop()
+    case _ =>
+      System.err.println("usage: graft.ScaleStress " +
+        "skew|snmskew|packskew|tert|bpebatch|apnd|audit <dir> [size]")
+      sys.exit(1)
   }
 
   // --- batched-BPE driver-round saving mode ---------------------------------
 
-  /** Measured driver-round saving of the conf-driven batched trainer at
+  /** Measured driver-round saving of the pipeline's batched trainer at
     * a REAL vocab size (the r11 verdict's "wire it in and measure"):
     * trains `merges` merges over a stress corpus sequentially (one
     * driver sync per merge) and at batchK = [[graft.text.Bpe.DefaultBatchK]],
@@ -183,7 +70,7 @@ object ScaleStress {
     * boundary is spec-documented, the overlap is reported, not
     * asserted). */
   def bpeBatch(dir: String, merges: Int): Unit = {
-    val spark = session()
+    val spark = Inspect.session()
     require(new java.io.File(s"$dir/documents.parquet").exists(),
       s"no documents at $dir — generate with StressGen facts")
     val words = graft.text.Bpe.vocabWords(
@@ -221,7 +108,7 @@ object ScaleStress {
     * (the windowed form's largest window partition) against the range
     * exchange's max/mean partition sizes, and both paths' wall times. */
   def snmSkew(base: String, nDocs: Int): Unit = {
-    val spark = session()
+    val spark = Inspect.session()
     import spark.implicits._
     val dir = s"$base/skewdocs"
     val hot = "the quick brown fox jump" // 24 chars — one skey, one block
@@ -292,7 +179,7 @@ object ScaleStress {
     * partition size (max-task input ≪ source size is the fix's claim),
     * and (c) both paths' wall times. */
   def packSkew(base: String, nDocs: Int): Unit = {
-    val spark = session()
+    val spark = Inspect.session()
     val dir = s"$base/packdocs"
     spark.range(nDocs).select(
       col("id").as("doc_id"),
@@ -348,7 +235,7 @@ object ScaleStress {
     * routes; the scoring chain is shared by both arms and orthogonal. */
   def tert(base: String, nDocs: Int): Unit = {
     import graft.ops.ScaleOps25
-    val spark = session()
+    val spark = Inspect.session()
     val dir = s"$base/scored"
     spark.range(nDocs).select(
       col("id").as("doc_id"),
@@ -373,176 +260,6 @@ object ScaleStress {
     spark.stop()
   }
 
-  /** Log-domain scoring cost at scale (q190 /
-    * [[graft.ops.ScaleOps30.scoreDocsWithLmLog2]]): the r15 claim —
-    * the 20-round integer log₂ chain is a PURE MAP over the joined
-    * bigram stream (plan-pinned to q183's exact operator shape), so
-    * its price at scale is a bounded constant factor over the add-k
-    * arithmetic scorer, not a new bottleneck. Synthetic corpus:
-    * nDocs × 24 tokens from a 5k vocabulary via modular mixing
-    * (deterministic, hash-spread bigram distribution), model trained
-    * on the even half, EVERYONE scored — nDocs·23 bigrams through two
-    * co-partitioned model joins, then either one fixed-point division
-    * (arith) or the 62-bit ratio + 20 squarings (log; since r17 the
-    * squarings are one codegen'd long loop,
-    * [[graft.functions.NegLog2Fp]], so expect ≈ parity — the shared
-    * DECIMAL ratio dominates both arms). Order note: arith runs first
-    * and pays JIT/page-cache warmup; the honest warm-vs-warm
-    * comparison is rep 2+ (median-of-3 mostly absorbs it). */
-  def plx(base: String, nDocs: Int): Unit = {
-    import graft.ops.{ScaleOps27, ScaleOps30}
-    val spark = session()
-    val vocabN = 5000L
-    spark.range(nDocs).select(col("id").as("doc_id"),
-      concat_ws(" ", (0 until 24).map(j =>
-        concat(lit("w"), pmod(col("id") * lit(2654435761L) + lit(j * 7919L),
-          lit(vocabN)))): _*).as("text"))
-      .repartition(16)
-      .write.mode("overwrite").parquet(s"$base/docs.parquet")
-    val docs = spark.read.parquet(s"$base/docs.parquet")
-    val ref = docs.filter(pmod(col("doc_id"), lit(2L)) === 0)
-    ScaleOps27.trainLmPairs(ref)
-      .write.mode("overwrite").parquet(s"$base/pairs.parquet")
-    val pairs = spark.read.parquet(s"$base/pairs.parquet")
-    val v = ScaleOps27.vocabSize(ref)
-    println(s"PLX n=$nDocs v=$v pair_types=${pairs.count()}")
-    // r16 CORRECTION: the r15 form measured `.count()` over the scoring
-    // aggregate — and Catalyst PRUNES unreferenced aggregate
-    // expressions through a count, so the probability collapse (the
-    // very thing under test) never executed in EITHER arm and the
-    // "ratio ~1.0" was two identical pruned plans racing. The arms now
-    // force full evaluation by SUMMING the score column (prune-proof:
-    // the collapse feeds the result), which is also what any real
-    // consumer does. See the `disp` arm for the composed-disposition
-    // costs and ROUND16_NOTES.md for the corrected claim.
-    val (aSec, aRows) = timed(spark, 3)(
-      ScaleOps27.scoreDocsWithLm(docs, "doc_id", "text", pairs, v)
-        .agg(count(lit(1)), sum(col("score_fp"))).head().getLong(0))
-    val (lSec, lRows) = timed(spark, 3)(
-      ScaleOps30.scoreDocsWithLmLog2(docs, "doc_id", "text", pairs, v)
-        .agg(count(lit(1)), sum(col("plx_fp"))).head().getLong(0))
-    println(f"PLX arith ${aSec}%.2fs rows=$aRows | " +
-      f"log2 ${lSec}%.2fs rows=$lRows | ratio ${lSec / aSec}%.2f")
-    require(aRows == lRows, s"scored-doc counts diverged: $aRows vs $lRows")
-    spark.stop()
-  }
-
-  /** Full-DISPOSITION cost at scale under both rankings (q185 vs q191 —
-    * the r16 claim): the log-domain CCNet loop (log₂ score → routed
-    * per-language boundaries → strict buckets → portable-hash keeps)
-    * prices at the arithmetic loop plus the chain the `plx` arm already
-    * measured free — no new exchange (plan-pinned at sf0.1: q191
-    * carries exactly q185's operator counts), so the ranking choice is
-    * a SEMANTIC decision, not a scale trade-off. Corpus: the `plx`
-    * arm's synthetic bigram distribution with the `tert` arm's skewed
-    * language split (95% dominant + 8 minor, so the boundary pass
-    * routes and the per-language groups are non-trivial); model
-    * trained on the dominant slice, everyone scored. Also measures the
-    * ABLATION at stress scale: the fraction of documents whose tertile
-    * FLIPS between rankings (the pinned ~16% at sf, re-observed at
-    * nDocs), and cross-checks both dispositions cover identical
-    * scored-doc sets. */
-  def disp(base: String, nDocs: Int): Unit = {
-    import graft.ops.{ScaleOps25, ScaleOps27, ScaleOps30}
-    import graft.pipeline.Packing
-    val spark = session()
-    val vocabN = 5000L
-    // per-position multiplicative mixing (id·(A+j) mod V) PLUS per-doc
-    // pseudo-random token noise, xxhash64(id, j)-seeded (r16 verdict
-    // #5): the multiplicative form alone grows bigram TYPES toward V²
-    // (the model joins are genuinely sort-merge-sized), but every doc's
-    // 24 bigrams share one algebraic (cxy, cx) profile, so the SCORE
-    // distribution collapsed to ~47 distinct (lang, score) pairs at 1M
-    // docs and the stress-scale flip share read 0 — materiality was
-    // only pinned at sf scale. The hash term is deterministic in
-    // (doc_id, position) — no Math.random, reruns bit-stable — and
-    // makes each doc's bigram profile its own draw, so scores are dense
-    // and the ranking ablation is OBSERVABLE at stress scale.
-    spark.range(nDocs).select(col("id").as("doc_id"),
-      when(pmod(col("id"), lit(20)) === 19,
-        concat(lit("minor"), pmod(col("id"), lit(8))))
-        .otherwise(lit("dominant")).as("lang"),
-      concat_ws(" ", (0 until 24).map(j =>
-        // reduce the (full-range signed) hash mod V BEFORE adding so
-        // the sum never leaves long range under ANSI arithmetic
-        concat(lit("w"), pmod(col("id") * lit(2654435761L + j)
-          + pmod(xxhash64(col("id"), lit(j)), lit(vocabN)),
-          lit(vocabN)))): _*).as("text"))
-      .repartition(16)
-      .write.mode("overwrite").parquet(s"$base/docs.parquet")
-    val docs = spark.read.parquet(s"$base/docs.parquet")
-    val ref = docs.filter(col("lang") === "dominant")
-    ScaleOps27.trainLmPairs(ref)
-      .write.mode("overwrite").parquet(s"$base/pairs.parquet")
-    val pairs = spark.read.parquet(s"$base/pairs.parquet")
-    val v = ScaleOps27.vocabSize(ref)
-    println(s"DISP n=$nDocs v=$v pair_types=${pairs.count()}")
-    val langs = docs.select(col("doc_id"), col("lang"))
-    def wlArith = ScaleOps27.scoreDocsWithLm(docs, "doc_id", "text", pairs, v)
-      .select(col("doc_id"), col("score_fp"))
-      .join(langs, Seq("doc_id"))
-      .select(col("doc_id"), col("lang"), col("score_fp"))
-    def wlLog = ScaleOps30.scoreDocsWithLmLog2(docs, "doc_id", "text", pairs, v)
-      .select(col("doc_id"), (-col("plx_fp")).as("score_fp"))
-      .join(langs, Seq("doc_id"))
-      .select(col("doc_id"), col("lang"), col("score_fp"))
-    val rate = when(col("bucket") === "head", ScaleOps25.Q180HeadRate)
-      .when(col("bucket") === "middle", ScaleOps25.Q180MiddleRate)
-      .otherwise(ScaleOps25.Q180TailRate)
-    // phase decomposition, one timing each: the scored frames are
-    // MATERIALIZED first (the scoring chain is the plx arm's already-
-    // measured quantity), so the boundary/bucket/keep timings isolate
-    // what the DISPOSITION adds per ranking — including the log
-    // ranking's bigger histogram (its value domain is 62·2²⁰ vs the
-    // arithmetic 10⁶ — the ScaleOps31 scale-shape constant)
-    def mat(wl: DataFrame, name: String): DataFrame = {
-      val t0 = System.nanoTime()
-      wl.write.mode("overwrite").parquet(s"$base/$name.parquet")
-      val out = spark.read.parquet(s"$base/$name.parquet")
-      println(f"DISP score[$name] ${(System.nanoTime() - t0) / 1e9}%.2fs " +
-        s"rows=${out.count()}")
-      out
-    }
-    val sa = mat(wlArith, "scored_arith")
-    val sl = mat(wlLog, "scored_log")
-    def histRows(wl: DataFrame): Long =
-      wl.groupBy(col("lang"), col("score_fp")).count().count()
-    println(s"DISP hist_rows arith=${histRows(sa)} log=${histRows(sl)}")
-    def phase(name: String)(body: => Long): Long = {
-      val t0 = System.nanoTime()
-      val n = body
-      println(f"DISP $name ${(System.nanoTime() - t0) / 1e9}%.2fs n=$n")
-      n
-    }
-    // nDocs is a valid routing upper bound; at stress scale the
-    // dominant language rides the histogram arm, exactly like 100 TB
-    phase("bounds[arith]")(ScaleOps25.tertileBounds(sa, nDocs.toLong).count())
-    phase("bounds[log]")(ScaleOps25.tertileBounds(sl, nDocs.toLong).count())
-    val aKept = phase("disposition[arith]")(
-      ScaleOps25.assignTertiles(sa, nDocs.toLong)
-        .filter(Packing.mixKeep(col("doc_id"), rate)).count())
-    val lKept = phase("disposition[log]")(
-      ScaleOps25.assignTertiles(sl, nDocs.toLong)
-        .filter(Packing.mixKeep(col("doc_id"), rate)).count())
-    println(s"DISP kept arith=$aKept log=$lKept")
-    // materiality + coverage at stress scale: same scored set, measured
-    // tertile-flip share between the rankings
-    val ba = ScaleOps25.assignTertiles(sa, nDocs.toLong)
-      .select(col("doc_id"), col("bucket").as("ba"))
-    val bl = ScaleOps25.assignTertiles(sl, nDocs.toLong)
-      .select(col("doc_id"), col("bucket").as("bl"))
-    val j = ba.join(bl, Seq("doc_id"), "full")
-      .agg(count(lit(1)).as("n"),
-        sum((col("ba").isNull || col("bl").isNull).cast("long")).as("uncov"),
-        sum((col("ba") =!= col("bl")).cast("long")).as("flips"))
-      .head()
-    require(j.getLong(1) == 0L,
-      s"dispositions covered different doc sets: ${j.getLong(1)} unmatched")
-    println(f"DISP flips=${j.getLong(2)}/${j.getLong(0)} " +
-      f"(${100.0 * j.getLong(2) / j.getLong(0)}%.1f%% tertile flips between rankings)")
-    spark.stop()
-  }
-
   /** Append-lifecycle evidence (q174 /
     * [[graft.dedup.FingerprintIndex.appendIndex]]): the r12 verdict's
     * "done =" clause — append cost must track the BATCH, not the
@@ -556,7 +273,7 @@ object ScaleStress {
     * re-written base so no-op re-appends never flatter the medians. */
   def apnd(base: String, nDocs: Int): Unit = {
     import graft.dedup.FingerprintIndex
-    val spark = session()
+    val spark = Inspect.session()
     def mkDocs(n: Int, tag: String): DataFrame =
       spark.range(n).select(col("id").as("doc_id"),
         concat_ws(" ", (0 until 12).map(j =>
@@ -601,126 +318,6 @@ object ScaleStress {
     spark.stop()
   }
 
-  /** Adversarial corpus for the source-overlap matrix (q171): a pool of
-    * shingle types planted into EVERY source, so the hottest hashes are
-    * each held by all S sources at once — the worst per-hash self-join
-    * fanout C(S,2). The scale claim under stress is the DISTINCT-first
-    * discipline: (source, hash) collapses raw occurrences to ≤ S rows
-    * per hash BEFORE the self-join, so the join input is sources·types
-    * and the pair table is C(S,2)·pool — never corpus-sized. Prints the
-    * collapse factor, the pair-table row count against that bound, and
-    * the matrix wall time. 30% of documents carry a pool shingle
-    * (poolSize types), the rest are doc-unique. */
-  def overlapSkew(base: String, nDocs: Int): Unit = {
-    val spark = session()
-    val dir = s"$base/docs"
-    val nSrc = 24
-    val poolSize = 1000
-    // each document is EXACTLY one 8-token shingle: pool docs repeat one
-    // of poolSize shared texts; the rest are unique per id
-    // source = (id/10) mod S and pool key = (id/10) div S mod pool:
-    // consecutive m = id/10 blocks sweep ALL S sources per key, so every
-    // pool key is held by every source — the true worst-case fanout
-    spark.range(nDocs).select(
-      col("id").as("doc_id"),
-      concat(lit("src"), pmod(expr("id div 10"), lit(nSrc))).as("source"),
-      when(pmod(col("id"), lit(10)) < 3,
-        concat_ws(" ", (1 to 8).map(j =>
-          concat(lit(s"p${j}_"),
-            pmod(expr(s"(id div 10) div $nSrc"), lit(poolSize)))): _*))
-        .otherwise(concat_ws(" ", (1 to 8).map(j =>
-          concat(lit(s"u${j}_"), col("id"))): _*)).as("text"))
-      .repartition(16)
-      .write.mode("overwrite").parquet(s"$dir/documents.parquet")
-    import org.apache.spark.sql.GraftSqlBridge.{column, expression}
-    val docs = spark.read.parquet(s"$dir/documents.parquet")
-    val occ = docs.count()
-    val pairs = docs.select(col("source"),
-      explode(column(graft.functions.SlidingShingleHashes(
-        expression(graft.text.TextAnalysis.tokens(col("text"))), 8))).as("h"))
-      .distinct()
-    val distinctPairs = pairs.count()
-    val joinRows = pairs.as("a")
-      .join(pairs.as("b"), col("a.h") === col("b.h")
-        && col("a.source") < col("b.source")).count()
-    val bound = poolSize.toLong * nSrc * (nSrc - 1) / 2
-    println(f"OVERLAPSKEW n=$nDocs sources=$nSrc pool=$poolSize " +
-      f"occurrences=$occ distinct_pairs=$distinctPairs " +
-      f"collapse=${occ.toDouble / distinctPairs}%.1fx " +
-      s"pair_rows=$joinRows bound=$bound within=${joinRows <= bound}")
-    val (sec, rows) = timed(spark, 3)(
-      graft.ops.ScaleOps23.q171SourceOverlap(spark, dir).count())
-    val top = graft.ops.ScaleOps23.q171SourceOverlap(spark, dir)
-      .limit(1).collect().headOption
-      .map(r => s"${r.getString(1)}~${r.getString(2)} shared=${r.getLong(3)}")
-      .getOrElse("none")
-    println(f"OVERLAPSKEW matrix ${sec}%.2fs rows=$rows top=$top")
-    spark.stop()
-  }
-
-  /** Stress the COMPOSED one-call training pipeline on a StressGen corpus
-    * (the x100 run is the point: 500k docs through curation →
-    * decontamination → mixing → cluster-keyed split → packing in one
-    * call). Prints per-stage counts and wall clock plus PEAK block-manager
-    * storage (memory + disk) sampled concurrently — the number that
-    * validates the per-stage free discipline: peak must track TWO adjacent
-    * stages, not the whole chain. Decontamination runs against a small
-    * planted test set so that stage does real work. */
-  def pipelineStress(dir: String, reuse: Boolean = true): Unit = {
-    val spark = session()
-    @volatile var peak = 0L
-    @volatile var stop = false
-    val monitor = new Thread(() => {
-      while (!stop) {
-        val infos = spark.sparkContext.getRDDStorageInfo
-        val used = infos.map(i => i.memSize + i.diskSize).sum
-        if (used > peak) peak = used
-        Thread.sleep(100)
-      }
-    })
-    monitor.setDaemon(true)
-    monitor.start()
-    val docs = spark.read.parquet(s"$dir/documents.parquet")
-      .withColumn("source", concat(lit("src"), pmod(col("doc_id"), lit(8))))
-    val testSet = docs.orderBy(col("doc_id")).limit(50)
-      .select(col("doc_id"), col("text"))
-    val t0 = System.nanoTime()
-    val r = graft.pipeline.TrainingPipeline.curateToTraining(
-      spark, docs, Some(testSet),
-      cfg = graft.pipeline.TrainingPipeline.Config(
-        curation = graft.pipeline.Curation.Params.production
-          .copy(minQuality = 0.0, minTokens = 1,
-            keepLangs = Seq("en", "es", "de", "fr", "und")),
-        mixRates = Map("src0" -> 0.5),
-        reusePairGraph = reuse),
-      ledger = false)
-    val total = (System.nanoTime() - t0) / 1e9
-    stop = true
-    r.stages.foreach(s =>
-      println(f"PIPELINE stage=${s.stage}%-16s in=${s.rowsIn} out=${s.rowsOut}"))
-    println(f"PIPELINE total=${total}%.1fs peak_storage=${peak / (1 << 20)}MiB " +
-      f"packed=${r.stages.last.rowsOut}")
-    r.free()
-    spark.stop()
-  }
-
-  /** Repeat ONE registered query in a fresh JVM: isolates a bench outlier
-    * from suite-interference (JIT/GC state accumulated by the 57 queries
-    * that ran before it in the full Bench pass). */
-  def single(name: String, dir: String, reps: Int): Unit = {
-    val spark = session()
-    val fn = SparkEntry.queries(name)
-    fn(spark, "/root/testdata/sf0.001").count() // warmup: JIT + codegen
-    spark.catalog.clearCache()
-    for (i <- 1 to reps) {
-      val t0 = System.nanoTime()
-      fn(spark, dir).count()
-      println(f"SINGLE $name rep$i ${(System.nanoTime() - t0) / 1e9}%.2f")
-      spark.catalog.clearCache()
-    }
-    spark.stop()
-  }
-
   // --- audit mode ---------------------------------------------------------
 
   /** Oracle-precondition audit for the hash-mirrored queries (q19/q21/q58):
@@ -731,7 +328,7 @@ object ScaleStress {
     * DuckDB's RE2 `\s` disagree on vertical tab and some Unicode spaces,
     * which would shift tokenization between the engines. */
   def audit(dir: String): Unit = {
-    val spark = session()
+    val spark = Inspect.session()
     import graft.text.TextAnalysis
     val docs = spark.read.parquet(s"$dir/documents.parquet")
       .select("doc_id", "text")
@@ -772,320 +369,10 @@ object ScaleStress {
     spark.stop()
   }
 
-  // --- curve mode ---------------------------------------------------------
-
-  /** opFilter: comma-separated op-name substring filter — re-measure one
-    * op's curve after a routing change without re-running the suite. */
-  def curve(base: String, reps: Int, opFilter: Option[String] = None): Unit = {
-    val spark = session()
-    def docs(dir: String) = spark.read.parquet(s"$dir/documents.parquet")
-    def emb(dir: String) = spark.read.parquet(s"$dir/embeddings.parquet")
-
-    // the 100× decade joins the curve when StressGen has written it
-    // (`runMain graft.StressGen <src> <base> 100`)
-    val scales = Seq(1, 3, 10, 100)
-      .filter(n => new java.io.File(s"$base/x$n/documents.parquet").exists())
-    require(scales.nonEmpty,
-      s"no StressGen corpora under $base (expected x1/x3/... dirs) — " +
-        "a mistyped base must fail loudly, not record an empty green run")
-    println(s"CURVE scales=${scales.mkString(",")}")
-    // IVF: build+persist each index once (untimed — the 100 TB story
-    // amortizes the build over many searches); search time is what curves.
-    // The index dir is stamped with its source corpus (path + row count)
-    // and rebuilt on mismatch, so an index left over from a previous
-    // StressGen run can never silently skew search timings/results.
-    // populated (untimed) below ONLY when ivf_search is in the filtered op
-    // set — a `curve ... tfidf` re-measure must not pay per-scale k-means
-    // builds for an op it never runs
-    var idxPaths: Map[Int, String] = Map.empty
-    def buildIndexes(): Unit = idxPaths = scales.map { n =>
-      val dir = s"$base/x$n"
-      val path = s"$base/ivf_idx_x$n"
-      val stamp = s"$dir|rows=${emb(dir).count()}"
-      val stampFile = java.nio.file.Paths.get(path, "_stamp")
-      val reusable = java.nio.file.Files.exists(stampFile) &&
-        java.nio.file.Files.readString(stampFile) == stamp
-      if (!reusable) {
-        val idx = graft.sim.Ivf.build(emb(dir), k = 16, iters = 3, cache = false)
-        graft.sim.Ivf.writeIndex(idx, path)
-        java.nio.file.Files.writeString(stampFile, stamp)
-      }
-      n -> path
-    }.toMap
-
-    // PQ (r9): train codebooks + persist the composed centroid-partitioned
-    // code layout once per scale (untimed, stamped+reused like the IVF
-    // indexes): the search curves must measure the SCAN, not the driver
-    // Lloyd trains or the one-time encode pass. Training re-runs even on
-    // stamp reuse — it is deterministic driver work whose VALUES the
-    // search needs, and it is outside the timed region either way.
-    var pqState: Map[Int, (graft.sim.Pq.PqModel, Array[(Int, Array[Float])], String)] =
-      Map.empty
-    def buildPq(): Unit = pqState = scales.map { n =>
-      val dir = s"$base/x$n"
-      val path = s"$base/pq_idx_x$n"
-      val model = graft.sim.Pq.train(emb(dir), "vec_id", "embedding",
-        m = 16, k = 64, iters = 3)
-      val cents = graft.sim.Ivf.train(emb(dir), "vec_id", "embedding",
-        k = 16, iters = 3)
-      val stamp = s"$dir|rows=${emb(dir).count()}|m=16|k=64|ivfk=16"
-      val stampFile = java.nio.file.Paths.get(path, "_stamp")
-      val reusable = java.nio.file.Files.exists(stampFile) &&
-        java.nio.file.Files.readString(stampFile) == stamp
-      if (!reusable) {
-        graft.sim.Pq.writeCodes(graft.sim.Pq.encodeAssigned(
-          graft.sim.Ivf.assign(emb(dir), "vec_id", "embedding", cents), model), path)
-        java.nio.file.Files.writeString(stampFile, stamp)
-      }
-      n -> ((model, cents, path))
-    }.toMap
-
-    val allOps: Seq[(String, String => Long)] = Seq(
-      "jaccard_capped" -> (dir => Dedup.nearDupPairs(
-        docs(dir), "doc_id", "text", k = 3, threshold = 0.5).count()),
-      "minhash_lsh" -> (dir => Dedup.minhashLshPairs(
-        docs(dir), "doc_id", "text", k = 3, numHashes = 32, bands = 8,
-        threshold = 0.5).count()),
-      // production path: band-bucket cap on (curve r6 found the uncapped
-      // self-join superlinear in the 10x->100x decade — 1.4s -> 36s)
-      "simhash" -> (dir => Dedup.simhashPairs(
-        docs(dir), "doc_id", "text", maxDist = 3,
-        maxBucket = Dedup.DefaultSimhashMaxBucket).count()),
-      // 0.9 (not the q25 oracle's 0.999): the mutated replicas are near
-      // but not exact twins, and the threshold must keep the exact-verify
-      // stage doing real work (nonzero surviving pairs) at every scale
-      "embedding_dup" -> (dir => Dedup.embeddingDupPairs(
-        emb(dir), "vec_id", "embedding", threshold = 0.9, nBits = 12).count()),
-      "dedup_clusters" -> { dir =>
-        val d = docs(dir)
-        Dedup.clusterPairs(d, "doc_id",
-          Dedup.nearDupPairs(d, "doc_id", "text", k = 3, threshold = 0.5)).count()
-      },
-      "ivf_search" -> { dir =>
-        val n = scales.find(s => dir.endsWith(s"x$s")).get
-        val idx = graft.sim.Ivf.loadIndex(spark, idxPaths(n))
-        val q = emb(dir).filter(col("vec_id") < 20)
-        graft.sim.Ivf.search(idx, q, topK = 5, nProbe = 4).count()
-      },
-      // r6 additions — the linearity claims measured, not asserted:
-      // chunk dedup has NO pair space (explode + df groupBy + join back)
-      "chunk_dedup" -> (dir => graft.dedup.ChunkDedup.chunkStats(
-        docs(dir), "doc_id", "text").count()),
-      // bloom incremental dedup: distributed build over one half, map-side
-      // probe of the other; counts force both split outputs
-      "bloom_dedup" -> { dir =>
-        val d = docs(dir)
-        val bloom = graft.dedup.BloomDedup.buildContentBloom(
-          d.filter(col("doc_id") % 2 === 0), "text", capacity = 2000000L)
-        val (defNew, cands) = graft.dedup.BloomDedup.splitByBloom(
-          d.filter(col("doc_id") % 2 === 1), "text", bloom)
-        defNew.count() + cands.count()
-      },
-      // SemDeDup with k ∝ N (constant target cluster size — the documented
-      // production rule): within-cluster pair space stays N·clusterSize/2,
-      // so the curve should hold near-linear instead of the quadratic a
-      // FIXED k would measure
-      "semdedup" -> { dir =>
-        val n = scales.find(s => dir.endsWith(s"x$s")).get
-        val e = emb(dir)
-        val cents = graft.sim.Ivf.train(e, "vec_id", "embedding",
-          k = 16 * n, iters = 3)
-        graft.dedup.SemDedup.clusterDupStats(
-          graft.sim.Ivf.assign(e, "vec_id", "embedding", cents),
-          threshold = 0.9).count()
-      },
-      // containment shares jaccard's capped candidate engine; its curve
-      // should track jaccard_capped's
-      "containment" -> (dir => Dedup.containmentPairs(
-        docs(dir), "doc_id", "text", k = 3, threshold = 0.9).count()),
-      "tfidf" -> (dir => graft.text.Relevance.tfIdfTopTerms(
-        docs(dir), "doc_id", "text", k = 3).count()),
-      // r7 additions — profiling/planning ops. The stress corpora carry
-      // only (doc_id, text), so the inputs q72/q73 take from the real
-      // documents table (n_chars, source) are derived here; the curve
-      // measures the operators' scaling, not the oracle shape.
-      "equidepth" -> (dir => graft.analyze.Analyze.equiDepthHistogram(
-        docs(dir).withColumn("n_chars", length(col("text"))),
-        "n_chars", nBins = 10).count()),
-      "token_budget" -> (dir => graft.pipeline.Packing.tokenBudgetPlan(
-        docs(dir)
-          .withColumn("source", concat(lit("src"), pmod(col("doc_id"), lit(8))))
-          .withColumn("n_tokens",
-            size(graft.text.TextAnalysis.tokens(col("text"))).cast("long")),
-        "source", "n_tokens",
-        pmod(col("doc_id"), lit(8)).cast("long") + lit(1L)).count()),
-      // includes the exact arm (distinct-token shuffle), the CMS
-      // treeAggregate, and the k driver probes — the full q74 surface
-      "heavy_hitters" -> (dir => graft.text.HeavyHitters
-        .topTokensWithSketchCheck(docs(dir), "text", k = 10).count()),
-      // canonical = the dedup_clusters pair graph + CC, plus the quality
-      // features and two cluster-partitioned windows — its curve should
-      // track dedup_clusters' with a near-constant window overhead
-      "canonical" -> (dir => graft.dedup.Dedup.canonicalKeep(
-        docs(dir), "doc_id", "text").count()),
-      "source_profile" -> (dir => graft.analyze.Analyze.sourceProfile(
-        docs(dir).withColumn("source",
-          concat(lit("src"), pmod(col("doc_id"), lit(8)))),
-        "source", "text").count()),
-      // dedup_savings = the canonical CC chain + one partial-agg rollup
-      // per source (q78) — expected to track canonical/dedup_clusters'
-      // exponent band with a near-constant rollup overhead
-      "dedup_savings" -> (dir => {
-        val d = docs(dir).withColumn("source",
-          concat(lit("src"), pmod(col("doc_id"), lit(8))))
-        val decided = graft.dedup.Dedup.canonicalKeep(d, "doc_id", "text")
-        graft.ops.ScaleOps4.dedupSavings(
-          d, decided, "source", "doc_id", "text").count()
-      }),
-      // r9 PQ scan paths over the persisted code layouts: pq_adc =
-      // exhaustive codes scan (expected ~linear — every list read, but 16x
-      // fewer bytes than floats); ivfpq_search = probe-pruned partitions
-      // at fixed nProbe=4 of k=16 (expected to hold well under pq_adc's
-      // wall since only probed lists are read)
-      "pq_adc" -> { dir =>
-        val n = scales.find(s => dir.endsWith(s"x$s")).get
-        val (model, _, path) = pqState(n)
-        graft.sim.Pq.search(
-          spark.read.parquet(path).select(col("corpus_id"), col("codes")),
-          emb(dir).filter(col("vec_id") < 20), model, topK = 5).count()
-      },
-      "ivfpq_search" -> { dir =>
-        val n = scales.find(s => dir.endsWith(s"x$s")).get
-        val (model, cents, path) = pqState(n)
-        graft.sim.Pq.searchIvfPq(spark.read.parquet(path), cents, model,
-          emb(dir).filter(col("vec_id") < 20), topK = 5, nProbe = 4).count()
-      },
-      // bigram LM (q89): the token-pair shuffle — expected to track the
-      // other token-exchange ops' linearity
-      "bigram_lm" -> (dir =>
-        graft.ops.ScaleOps5.q89BigramLm(spark, dir).count()),
-      // BM25 (q91): explode→filter-to-query-terms→tf groupBy; candidate
-      // rows scale with corpus but stay term-bounded — expected linear
-      // with the tf exchange as the only corpus-sized shuffle
-      "bm25" -> (dir =>
-        graft.ops.ScaleOps6.q91Bm25(spark, dir).count()),
-      // char diversity (q95): pure one-pass kernel, zero shuffles —
-      // expected flat-to-linear like the other scan-stage kernels
-      "char_diversity" -> (dir =>
-        graft.ops.ScaleOps6.q95CharDiversity(spark, dir).count()),
-      // wav_decode = the q79 pure-map codec kernel (fixture bytes built
-      // in-plan, then genuinely parsed back) — expected flat-to-linear
-      // with zero shuffles
-      "wav_decode" -> (dir => {
-        import org.apache.spark.sql.GraftSqlBridge.{column, expression}
-        val media = docs(dir).select(
-          col("doc_id").cast("long").as("media_id"),
-          column(graft.multimodal.WavFixture(
-            expression(col("doc_id").cast("long")))).as("content"))
-        graft.multimodal.Multimodal.decodeWavFeatures(media).count()
-      }),
-      // image_decode (q101, r9): the mixed PPM/PNG auto-sniff kernel — for
-      // PNG rows a full zlib inflate + CRC verify + unfilter per blob;
-      // expected flat-to-linear like wav_decode (pure map, zero shuffles)
-      "image_decode" -> (dir => {
-        import org.apache.spark.sql.GraftSqlBridge.{column, expression}
-        val media = docs(dir).select(
-          col("doc_id").cast("long").as("media_id"),
-          when(col("doc_id") % 2 === 0,
-            column(graft.multimodal.PpmFixture(
-              expression(col("doc_id").cast("long")))))
-            .otherwise(column(graft.multimodal.PngFixture(
-              expression(col("doc_id").cast("long"))))).as("content"))
-        graft.multimodal.Multimodal.decodeImageStats(media).count()
-      }),
-      // transitions (q103, r9): the user-keyed lead() window over the
-      // replicated events corpus (new users per replica, so the window
-      // exchange scales in key cardinality too) — expected linear, the
-      // one event-sized exchange dominating
-      "transitions" -> (dir =>
-        graft.ops.ScaleOps8.q103Transitions(spark, dir).count()),
-      // ab_test (q106, r9): two distinct-collapse partial-agg passes over
-      // events; everything after runs on a constant-size table — expected
-      // linear with the distinct exchanges, flat tail
-      "ab_test" -> (dir =>
-        graft.ops.ScaleOps8.q106AbTest(spark, dir).count()),
-      // sparse_sim (q133, r9): the df-capped 5-gram posting self-join —
-      // the cap is RELATIVE (2% of N), so template grams are dropped at
-      // every decade and the join should stay collision-bounded, not
-      // quadratic; this curve is the evidence
-      "sparse_sim" -> (dir =>
-        graft.ops.ScaleOps12.q133SparseSim(spark, dir).count()),
-      // phrase_search (q130, r9): posexplode + one doc-partitioned window
-      // — expected linear
-      "phrase_search" -> (dir =>
-        graft.ops.ScaleOps11.q130PhraseSearch(spark, dir).count()),
-      // concurrency (q123, r9): sessionize + two-pass sweep; the only
-      // unpartitioned window is over |hours| rows (calendar-bounded), so
-      // the curve should track the sessionize window, ~linear
-      "concurrency" -> (dir =>
-        graft.ops.ScaleOps10.q123Concurrency(spark, dir).count()),
-      // cusum (q129, r9): one (type, day) partial agg then tiny windows —
-      // expected linear with a flat tail
-      "cusum" -> (dir =>
-        graft.ops.ScaleOps11.q129Cusum(spark, dir).count()),
-      // rrf_fusion (q131, r9): 10 broadcast queries × corpus scoring +
-      // two per-query corpus-sized window sorts — expected ~linear·log
-      "rrf_fusion" -> (dir =>
-        graft.ops.ScaleOps11.q131RrfFusion(spark, dir).count()),
-      // jl_project (q136, r9): pure map, 16 fused dot kernels per row —
-      // expected linear
-      "jl_project" -> (dir =>
-        graft.ops.ScaleOps12.q136JlProject(spark, dir).count()),
-      // skip_grams (q152, r10): 6-way probe explode + (doc,pos) equi-join
-      // + pair count — expected linear (pair space is 6·tokens, Zipf-hot
-      // pairs fold map-side)
-      "skip_grams" -> (dir =>
-        graft.ops.ScaleOps18.q152SkipGrams(spark, dir).count()),
-      // pmi_lift (q153, r10): bigram/unigram partial aggs + vocab-sized
-      // marginal joins — expected linear with a vocab-bounded tail
-      "pmi_lift" -> (dir =>
-        graft.ops.ScaleOps18.q153PmiLift(spark, dir).count()),
-      // incr_dedup (q157, r10): history-distinct + batch semi-join on the
-      // 8-byte shingle hash — expected linear (both sides are one
-      // hash-partitioned pass; replicas share shingles so the history
-      // set stays near-constant while the batch side scales)
-      "incr_dedup" -> (dir =>
-        graft.ops.ScaleOps18.q157IncrementalDedup(spark, dir).count()))
-
-    val opsRun = opFilter match {
-      case None => allOps
-      case Some(f) =>
-        val pats = f.split(",").toSeq
-        allOps.filter { case (name, _) => pats.exists(name.contains) }
-    }
-    require(opsRun.nonEmpty,
-      s"op filter '${opFilter.getOrElse("")}' matches nothing; " +
-        s"available: ${allOps.map(_._1).mkString(", ")}")
-    if (opsRun.exists(_._1 == "ivf_search")) buildIndexes()
-    if (opsRun.exists(p => p._1 == "pq_adc" || p._1 == "ivfpq_search")) buildPq()
-
-    // warmup (JIT + codegen) on the smallest corpus
-    opsRun.foreach { case (_, f) => f(s"$base/x1") }
-    spark.catalog.clearCache()
-
-    val results = for ((name, f) <- opsRun) yield {
-      val pts = scales.map { n =>
-        val (sec, rows) = timed(spark, reps)(f(s"$base/x$n"))
-        println(f"CURVE $name x$n%-3d ${sec}%.2fs rows=$rows")
-        (n.toDouble, sec)
-      }
-      // least-squares slope of ln t vs ln n over the 3 points
-      val xs = pts.map(p => math.log(p._1)); val ys = pts.map(p => math.log(p._2))
-      val xm = xs.sum / xs.size; val ym = ys.sum / ys.size
-      val e = xs.zip(ys).map { case (x, y) => (x - xm) * (y - ym) }.sum /
-        xs.map(x => (x - xm) * (x - xm)).sum
-      println(f"CURVE $name exponent=${e}%.2f")
-      name -> e
-    }
-    val worst = results.maxBy(_._2)
-    println(f"CURVE worst ${worst._1} exponent=${worst._2}%.2f")
-    spark.stop()
-  }
-
   // --- skew mode ----------------------------------------------------------
 
   def skew(base: String): Unit = {
-    val spark = session()
+    val spark = Inspect.session()
     val cap = Dedup.DefaultNearDupMaxDf
     // warmup both plan shapes (JIT + codegen) before any timing
     val w = spark.read.parquet(s"$base/skew1/documents.parquet")
@@ -1117,96 +404,6 @@ object ScaleStress {
         println(f"SKEW skew$n uncapped_path ${unSec}%.2fs pairs=$unRows")
       }
     }
-    spark.stop()
-  }
-
-  // --- legacy fact-table mode ---------------------------------------------
-
-  def facts(dir: String): Unit = {
-    val spark = session()
-    val qs = Seq(
-      "q01_pricing_summary", "q02_filter_scan", "q03_join_revenue",
-      "q08_topk", "q12_rollup", "q33_cube", "q38_range_join",
-      // text layer over the token-mutated 10x documents corpus (every
-      // shingle distinct across replicas -> df flat, corpus 10x: the
-      // fair "new text" scaling shape, not pathological duplication)
-      "q15_dedup_exact", "q16_token_count", "q17_quality_score",
-      "q18_lang_id", "q19_ngram_jaccard", "q21_minhash_lsh", "q22_simhash",
-      "q23_fingerprint", "q57_repetition",
-      // r6 text/pipeline additions with linearity claims to check at 100×
-      "q64_chunk_dedup", "q65_tfidf", "q69_stratified_sample",
-      // r9 batch-2 fact-table ops: SCD2 (one business-key exchange) and
-      // z-order layout profiling (one zbucket aggregation exchange)
-      "q93_scd2", "q94_zorder",
-      // r9 batch-3: integer PageRank — the Pregel-round join/groupBy pair
-      // over the N×-replicated trade graph
-      "q96_pagerank",
-      // r9 batch-9/11 fact-table ops: basket pair generation (per-order
-      // self-join — quadratic only in basket size), frontier BFS over the
-      // replicated co-purchase graph, Benford/MAD scans, key-skew report
-      // (events in the facts corpus is a byte copy — q123 runs on the
-      // CURVE corpora where events replicate; here the fact tables scale)
-      "q124_basket_lift", "q125_benford", "q126_mad_outliers",
-      "q127_bfs_hops", "q135_skew_report")
-    qs.foreach { n => SparkEntry.queries(n)(spark, "/root/testdata/sf0.001").count() }
-    spark.catalog.clearCache()
-    for (rep <- 1 to 2) qs.foreach { n =>
-      val t0 = System.nanoTime()
-      // per-query catch: a stale corpus (e.g. documents written before
-      // lang/source were preserved) must cost ONE query's timing and say
-      // why, not abort the rest of the protocol
-      try {
-        SparkEntry.queries(n)(spark, dir).count()
-        println(f"STRESS rep$rep $n ${(System.nanoTime() - t0) / 1e9}%.2f")
-      } catch {
-        // NonFatal only: an OOM/VM error must abort the protocol (timings
-        // after it are meaningless); getMessage is null-guarded so the
-        // handler can't itself throw and kill the remaining reps.
-        case scala.util.control.NonFatal(e) =>
-          val msg = Option(e.getMessage).iterator
-            .flatMap(_.linesIterator).find(_.nonEmpty).getOrElse(e.toString)
-          println(s"STRESS rep$rep $n FAILED ${e.getClass.getSimpleName}: " +
-            s"$msg (stale corpus? regenerate with StressGen)")
-      }
-      spark.catalog.clearCache()
-    }
-    spark.stop()
-  }
-
-  /** Classifier training-cost rep (q176): train the batch perceptron on
-    * n and 4n synthetic docs. The claim under test: cost scales
-    * ~LINEARLY in corpus size and nothing else — K bounded epochs, each
-    * one token-sized partial agg + a broadcast of 65 longs; the model,
-    * the driver traffic, and the epoch count are all corpus-independent.
-    * A super-linear ratio (≳ 6× for the 4× corpus) means an epoch is
-    * paying something corpus-quadratic and the rep fails the claim. */
-  def clf(base: String, nDocs: Int): Unit = {
-    val spark = session()
-    def mkDocs(n: Int): DataFrame =
-      spark.range(n).select(col("id").as("doc_id"),
-        concat_ws(" ", (0 until 16).map(j =>
-          concat(lit("w"), (col("id") * 31 + lit(j)) % 9973)): _*).as("text"),
-        when(col("id") % 4 < 2, "en").otherwise("zz").as("lang"))
-    def materialize(n: Int, name: String): DataFrame = {
-      mkDocs(n).write.mode("overwrite").parquet(s"$base/$name.parquet")
-      spark.read.parquet(s"$base/$name.parquet")
-    }
-    val x1 = materialize(nDocs, "clf_x1")
-    val x4 = materialize(4 * nDocs, "clf_x4")
-    // warm the codegen/JIT path once on the small corpus
-    graft.ops.ScaleOps25.trainClassifier(spark, x1)
-    def timedTrain(df: DataFrame): Double = {
-      val t0 = System.nanoTime()
-      val w = graft.ops.ScaleOps25.trainClassifier(spark, df)
-      require(w.exists(_ != 0L), "training degenerated to a zero model")
-      (System.nanoTime() - t0) / 1e9
-    }
-    val s1 = timedTrain(x1)
-    val s4 = timedTrain(x4)
-    println(f"CLF x1($nDocs docs) ${s1}%.2fs  x4(${4 * nDocs}) ${s4}%.2fs  " +
-      f"ratio ${s4 / s1}%.2f (linear target ~4, fail > 6)")
-    require(s4 / s1 < 6.0,
-      f"classifier training scaled super-linearly: ${s4 / s1}%.2fx for a 4x corpus")
     spark.stop()
   }
 }

@@ -3,11 +3,11 @@ package graft
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-/** Deterministic stress-corpus generator for the ScaleStress scaling
-  * curves: replicates the sf0.1 documents/embeddings tables 1×/3×/10×
-  * with PER-REPLICA MUTATION so the scaled corpora behave like *new* data
-  * (every replica's shingles are distinct → document frequency stays
-  * flat; every replica's vectors point in new directions → LSH/IVF
+/** Deterministic stress-corpus generator for the `Inspect curve`
+  * scaling curves and the `ScaleStress` skew modes: replicates the sf0.1
+  * documents/embeddings tables 1×/3×/10× with PER-REPLICA MUTATION so
+  * the scaled corpora behave like *new* data (every replica's shingles
+  * are distinct → document frequency stays flat; every replica's vectors point in new directions → LSH/IVF
   * buckets spread) — replication without mutation would measure the
   * pathological all-duplicates case, not scaling.
   *
@@ -126,7 +126,7 @@ object StressGen {
   }
 
   /** `facts <src> <out> <n>`: the N× fact-table corpus for
-    * `ScaleStress facts` — orders/lineitem replicated with orderkey
+    * `Inspect curve` — orders/lineitem replicated with orderkey
     * offsets, documents/embeddings token/vector-mutated, dims + events
     * copied byte-for-byte (events carries TIMESTAMP(NANOS), which a
     * plain read-rewrite would reject/alter; a file copy preserves it). */
@@ -175,11 +175,7 @@ object StressGen {
   def main(args: Array[String]): Unit = {
     val graphMode = args.headOption.contains("graphfacts")
     if (graphMode) {
-      val spark = SparkSession.builder().master("local[32]")
-        .config("spark.sql.shuffle.partitions", "32")
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.ui.enabled", "false").getOrCreate()
-      spark.sparkContext.setLogLevel("WARN")
+      val spark = Inspect.session()
       graphCorpus(spark, args.lift(1).getOrElse("/root/testdata/sf0.001"),
         args.lift(2).getOrElse("/tmp/stress_graph/x1"),
         args.lift(3).flatMap(_.toIntOption).getOrElse(1))
@@ -189,11 +185,7 @@ object StressGen {
     val rest = if (factsMode) args.drop(1) else args
     val src = rest.headOption.getOrElse("/root/testdata/sf0.1")
     val outBase = if (rest.length > 1) rest(1) else "/tmp/stress_r5"
-    val spark = SparkSession.builder().master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Inspect.session()
     if (factsMode) {
       factsCorpus(spark, src, outBase,
         rest.lift(2).flatMap(_.toIntOption).getOrElse(100))

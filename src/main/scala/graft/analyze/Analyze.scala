@@ -31,12 +31,6 @@ object Analyze {
     "dd-MM-yyyy HH:mm:ss",
     "dd-MM-yyyy")
 
-  /** First-match multi-pattern parse (B2) as a coalesce chain of
-    * try_to_timestamp — codegen'd, null on no-match, never throws under
-    * ANSI mode (Spark 4 default). */
-  def parseDatetime(c: Column): Column =
-    coalesce(DatetimePatterns.map(p => try_to_timestamp(c, lit(p))): _*)
-
   /** ISO-8601 'T' variant appears in the JSON fixtures
     * (dates_json_format.json `created_at`); the reference's pandas read
     * parses it natively. Included after the 6 core patterns. */

@@ -360,8 +360,8 @@ object ScaleOps10 {
     * both directions) is built once and persisted; frontier and visited
     * sets are NODE-sized. The entry point MEASURES the node set first
     * (one approx_count_distinct scan — no shuffle beyond partial aggs)
-    * and branches on `graft.bfs.broadcastMaxNodes` (default 8M ≈ 64 MB
-    * of raw longs per executor before hashmap overhead):
+    * and branches on [[BfsBroadcastMaxNodes]] (8M ≈ 64 MB of raw longs
+    * per executor before hashmap overhead):
     *   - node set under the bound: each round BROADCASTS frontier and
     *     visited against the cached edges — one broadcast hash join +
     *     one node-sized dedup per round, edges never re-shuffled.
@@ -383,14 +383,15 @@ object ScaleOps10 {
   private val nodeCountMemo =
     scala.collection.concurrent.TrieMap[(String, String), Long]()
 
+  /** Node-set bound of [[q127BfsHops]]'s broadcast-frontier branch. */
+  private[graft] val BfsBroadcastMaxNodes = 8000000L
+
   def q127BfsHops(s: SparkSession, dir: String): DataFrame = {
-    val maxNodes = s.conf.getOption("graft.bfs.broadcastMaxNodes")
-      .map(_.toLong).getOrElse(8000000L)
     val nNodes = nodeCountMemo.getOrElseUpdate(
       (dir, Relational.corpusSignature(s, dir, "lineitem")),
       Relational.fanOut(t(s, dir, "lineitem"))
         .agg(approx_count_distinct(col("l_partkey")).as("n")).head().getLong(0))
-    bfsHops(s, dir, broadcastFrontier = nNodes <= maxNodes)
+    bfsHops(s, dir, broadcastFrontier = nNodes <= BfsBroadcastMaxNodes)
   }
 
   /** The shuffle branch, callable directly for specs/stress. */

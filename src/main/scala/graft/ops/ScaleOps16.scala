@@ -34,11 +34,10 @@ object ScaleOps16 {
     * explode, no vocab groupBy; exactly Σca/Σcb because `split` and
     * `explode(split)` count the same elements, empty-string tokens
     * included) and branches:
-    *   - N_A·N_B ≤ `graft.drift.maxNaNb` (default = the hard 10¹⁶
-    *     DECIMAL(38) limit, [[DriftMaxNaNb]]): the EXACT path — totals
-    *     as literals, arithmetic unchanged (the oracle's shape), so the
-    *     oracle comparison holds everywhere the exact arithmetic is
-    *     representable at all.
+    *   - N_A·N_B ≤ [[DriftMaxNaNb]] (the hard 10¹⁶ DECIMAL(38) limit):
+    *     the EXACT path — totals as literals, arithmetic unchanged (the
+    *     oracle's shape), so the oracle comparison holds everywhere the
+    *     exact arithmetic is representable at all.
     *   - above it: PRE-SCALED totals. The score is invariant under
     *     N_A,N_B → N_A/k, N_B/k (diff scales by 1/k, numerator by 1/k²,
     *     denominator by 1/k² — exactly), so both totals divide by the
@@ -81,12 +80,10 @@ object ScaleOps16 {
         (if (tot.isNullAt(0)) 0L else tot.getLong(0),
           if (tot.isNullAt(1)) 0L else tot.getLong(1))
       })
-    val bound = s.conf.getOption("graft.drift.maxNaNb")
-      .map(BigInt(_)).getOrElse(DriftMaxNaNb)
-    q147DriftScored(byTok, na, nb, bound)
+    q147DriftScored(byTok, na, nb, DriftMaxNaNb)
   }
 
-  /** Default N_A·N_B guard for [[q147TokenDrift]]: the hard 10¹⁶
+  /** N_A·N_B guard for [[q147TokenDrift]]: the hard 10¹⁶
     * DECIMAL(38) numerator bound itself (r12 advice — the earlier 10¹⁵
     * default left a 10¹⁵..10¹⁶ band where the Spark arm pre-scaled,
     * approximate, while the unchanged exact mirror silently
@@ -96,7 +93,7 @@ object ScaleOps16 {
     * the single extremal point diff = 10¹⁶ exactly (one token owning
     * every occurrence of a maximal corpus) overflows by one part in
     * 10³⁸ and fails LOUDLY via the ANSI raise / per-row assert — never
-    * silently. Override per session via `graft.drift.maxNaNb`. */
+    * silently. */
   private[graft] val DriftMaxNaNb: BigInt = BigInt(10).pow(16)
 
   /** Per-(corpus identity) memo of the (N_A, N_B) half totals — see
@@ -126,7 +123,7 @@ object ScaleOps16 {
     * score_fp is ASSERTED non-null row-by-row in both branches. */
   private[graft] def q147DriftScored(byTok: DataFrame, na: Long, nb: Long,
       maxNaNb: BigInt): DataFrame = {
-    require(maxNaNb > 0, s"graft.drift.maxNaNb must be positive, got $maxNaNb")
+    require(maxNaNb > 0, s"maxNaNb must be positive, got $maxNaNb")
     val prod = BigInt(na) * BigInt(nb)
     val (naS, nbS) =
       if (prod <= maxNaNb) (na, nb)

@@ -39,11 +39,11 @@ import org.apache.spark.sql.functions._
   * on the densified 14.5M-pair-type stress corpus, both kernels now
   * dominated by the shared DECIMAL ratio step; the r16 era's 2.5–4.4×
   * band was the 20-round DECIMAL(38,0) projection tower, measured
-  * honestly by the `ScaleStress disp`/fixed-`plx` arms after the r15
+  * honestly at 1M stress docs (ROUND16_NOTES.md) after the r15
   * "free" ratio was found to be a count()-pruned artifact — linear
   * CPU, no new data movement) + q185's routed
   * boundary pass and rollup (sub-second next to scoring at stress
-  * scale, same arm); q192 adds one
+  * scale, same record); q192 adds one
   * ≤#langs-row artifact write and a metadata-sized validated load. No
   * new exchange class anywhere — the negation is a projection. One
   * constant to state honestly: the HISTOGRAM boundary arm's
@@ -54,8 +54,9 @@ import org.apache.spark.sql.functions._
   * boundary exchange carries min(langRows, 6.5e7) histogram rows per
   * language, never the corpus), but the per-language window's
   * single-partition sort pays that bigger constant at full saturation —
-  * the `ScaleStress disp` arm measures the composed cost of both
-  * rankings' dispositions at stress scale. */
+  * ROUND16_NOTES.md records the composed cost of both rankings'
+  * dispositions at stress scale: sub-second at 1M docs in both, with
+  * scoring dominating. */
 object ScaleOps31 {
 
   private def md5hex(s: String): String =

@@ -217,11 +217,9 @@ object ScaleOps9 {
     // keys both sides identically; false positives only ride the shuffle
     // into the exact join, false negatives cannot exist — the result is
     // bit-identical with or without the filter. Scale-adaptive: above
-    // `graft.triangles.bloomMaxEdges` (default 64M edges ≈ 150 MB of
-    // filter at 3% fpp — past what every task should hold) the filter is
-    // skipped and the plain join stands.
-    val bloomMaxEdges = s.conf.getOption("graft.triangles.bloomMaxEdges")
-      .map(_.toLong).getOrElse(64000000L)
+    // 64M edges (≈ 150 MB of filter at 3% fpp — past what every task
+    // should hold) the filter is skipped and the plain join stands.
+    val bloomMaxEdges = 64000000L
     val wedges0 = dir0.as("e1").join(dir0.as("e2"),
         col("e1.src") === col("e2.src") && col("e1.dst") < col("e2.dst"))
       .select(col("e1.src").as("a"), col("e1.dst").as("b"), col("e2.dst").as("c"))

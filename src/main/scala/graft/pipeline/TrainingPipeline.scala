@@ -99,9 +99,9 @@ object TrainingPipeline {
       /** Pack context windows by EXACT trained-BPE token counts (the
         * tokens the model will see — q162's semantics) instead of the
         * whitespace tokenizer: trains a tokenizer on the post-split
-        * corpus through [[graft.text.Bpe.train]] — the CONF-DRIVEN
-        * batched trainer (`graft.bpe.batchK`, default 16 merges per
-        * driver round; the oracle arm q150 stays sequential) — then
+        * corpus through [[graft.text.Bpe.train]] — the batched trainer
+        * (16 merges per driver round; the oracle arm q150 stays
+        * sequential) — then
         * packs on [[graft.text.Bpe.bpeTokenCounts]]. Adds a
         * `tokenizer_train` ledger stage. Off by default: the whitespace
         * path is the historical q61-mirrored shape. */

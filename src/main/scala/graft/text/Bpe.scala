@@ -74,9 +74,9 @@ object Bpe {
       .groupBy(col("tok")).agg(count(lit(1)).as("freq"))
       .withColumn("seg", segmentInit(col("tok")))
 
-  /** Default merge batch per driver round for the conf-driven
-    * [[train]]. 16 cuts driver synchronization ~16× at production vocab
-    * sizes while keeping the collected head O(batchK). */
+  /** Merge batch per driver round of [[train]]. 16 cuts driver
+    * synchronization ~16× at production vocab sizes while keeping the
+    * collected head O(batchK). */
   val DefaultBatchK = 16
 
   /** Driver-synchronization rounds of the most recent train call in
@@ -86,20 +86,13 @@ object Bpe {
   val lastDriverRounds = new java.util.concurrent.atomic.AtomicInteger(0)
 
   /** The PIPELINE-FACING trainer (the r11 verdict's "wire the batched
-    * trainer into a production path"): dispatches on `graft.bpe.batchK`
-    * (default [[DefaultBatchK]]) — `1` IS [[trainSequential]], `> 1`
-    * routes through [[trainBatched]] with its documented
-    * conflict-approximation boundary. The ORACLE arm
-    * ([[graft.ops.ScaleOps17.bpeTrain]] / q150) calls trainSequential
-    * directly and never consults the conf: the mirrors unroll the
+    * trainer into a production path"): [[trainBatched]] at
+    * [[DefaultBatchK]], with its documented conflict-approximation
+    * boundary. The ORACLE arm ([[graft.ops.ScaleOps17.bpeTrain]] / q150)
+    * calls [[trainSequential]] directly: the mirrors unroll the
     * sequential schedule, so the oracle must too. */
-  def train(words0: DataFrame, rounds: Int): Seq[Merge] = {
-    val batchK = words0.sparkSession.conf
-      .getOption("graft.bpe.batchK").map(_.toInt).getOrElse(DefaultBatchK)
-    require(batchK >= 1, s"graft.bpe.batchK must be >= 1, got $batchK")
-    if (batchK == 1) trainSequential(words0, rounds)
-    else trainBatched(words0, rounds, batchK)
-  }
+  def train(words0: DataFrame, rounds: Int): Seq[Merge] =
+    trainBatched(words0, rounds, DefaultBatchK)
 
   /** Adjacent symbol pairs of the vocab table's `seg`, weighted by word
     * frequency. `words` must carry (tok, freq, seg). */

@@ -130,7 +130,8 @@ class AnalyzeSpec extends GraftSuite {
   }
   test("multi-pattern parse priority: datetime-with-time before date-only") {
     val df = Seq("2024-01-15 10:30:00").toDF("d")
-    val ts = df.select(Analyze.parseDatetime($"d")).head().getTimestamp(0)
+    val ts = df.select(Analyze.castColumn($"d", InferredType.DateTimeType))
+      .head().getTimestamp(0)
     assert(ts.toString.startsWith("2024-01-15 10:30:00"))
   }
 }

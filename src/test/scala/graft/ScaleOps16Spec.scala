@@ -58,23 +58,20 @@ class ScaleOps16Spec extends GraftSuite {
   }
 
   test("q147: forced-scale branch is value-identical when k divides the totals (score invariance made code)") {
-    val dir = tempDir("q147-scale")
-    writeDocs(dir, Seq(
-      (0L, "same drifted drifted"), (2L, "same drifted drifted"),
-      (1L, "same"), (3L, "same")))
-    val exact = graft.ops.ScaleOps16.q147TokenDrift(spark, dir.toString)
+    import spark.implicits._
+    // the counts of the corpus {even: "same drifted drifted" ×2,
+    // odd: "same" ×2}: NA=6, NB=2
+    val byTok = Seq(("same", 2L, 2L), ("drifted", 4L, 0L)).toDF("tok", "ca", "cb")
+    def scored(bound: BigInt) = graft.ops.ScaleOps16.q147DriftScored(byTok, 6L, 2L, bound)
       .collect().map(r => (r.getString(0), r.getLong(1), r.getLong(2), r.getLong(3))).toSeq
-    // NA=6, NB=2, NA·NB=12 > 6 forces the pre-scaled branch with
-    // k = ceil(12/6) = 2; half-up rounding gives naS=3, nbS=1 — the
-    // exact 3:1 proportion, so the invariance is EXACT and the whole
-    // row set (scores included) must be bit-identical
-    spark.conf.set("graft.drift.maxNaNb", "6")
-    try {
-      val scaled = graft.ops.ScaleOps16.q147TokenDrift(spark, dir.toString)
-        .collect().map(r => (r.getString(0), r.getLong(1), r.getLong(2), r.getLong(3))).toSeq
-      assert(scaled == exact, s"forced-scale diverged:\n  $scaled\n  $exact")
-      assert(scaled.forall(_._4 >= 0L))
-    } finally spark.conf.unset("graft.drift.maxNaNb")
+    val exact = scored(graft.ops.ScaleOps16.DriftMaxNaNb)
+    // NA·NB=12 > 6 forces the pre-scaled branch with k = ceil(12/6) = 2;
+    // half-up rounding gives naS=3, nbS=1 — the exact 3:1 proportion, so
+    // the invariance is EXACT and the whole row set (scores included)
+    // must be bit-identical
+    val scaled = scored(6)
+    assert(scaled == exact, s"forced-scale diverged:\n  $scaled\n  $exact")
+    assert(scaled.forall(_._4 >= 0L))
   }
 
   test("q147: OVER-BOUND synthetic counts — the scaled branch reproduces the BigInt-exact ranking with no silent nulls (the r10 prose bound, now a measured branch)") {

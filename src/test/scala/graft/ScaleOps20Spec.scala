@@ -208,14 +208,13 @@ class ScaleOps20Spec extends GraftSuite {
     assert(seqM == Seq((1, "a", "b", 8L), (2, "ab", "ab", 4L)))
   }
 
-  test("Bpe.train: graft.bpe.batchK=1 IS the sequential schedule; the batched default cuts driver rounds (r11 verdict #5)") {
+  test("Bpe.train: trainBatched at batchK=1 IS the sequential schedule; the batched default cuts driver rounds (r11 verdict #5)") {
     val words = graft.ops.ScaleOps17.bpeWords(spark, sf)
     val seqM = graft.text.Bpe.trainSequential(words, 8)
     assert(graft.text.Bpe.lastDriverRounds.get() == 8,
       "sequential = one driver round per merge, by definition")
-    spark.conf.set("graft.bpe.batchK", "1")
-    try assert(graft.text.Bpe.train(words, 8) == seqM)
-    finally spark.conf.unset("graft.bpe.batchK")
+    assert(graft.text.Bpe.trainBatched(words, 8, batchK = 1) == seqM)
+    assert(graft.text.Bpe.lastDriverRounds.get() == 8)
     // default (batchK=16): same corpus, strictly fewer driver rounds —
     // the saving the batched trainer exists for. (The schedule may
     // legitimately diverge on conflicts; rounds are the pinned contract.)
@@ -225,7 +224,7 @@ class ScaleOps20Spec extends GraftSuite {
     assert(defRounds < 8, s"batched path must synchronize < merges times, took $defRounds")
   }
 
-  test("curateToTraining(packByBpe): tokenizer_train ledger stage, conf-driven batched rounds, packs re-derive from the scalar encoder") {
+  test("curateToTraining(packByBpe): tokenizer_train ledger stage, batched rounds, packs re-derive from the scalar encoder") {
     import graft.pipeline.{TrainingPipeline, Curation}
     val docs = spark.read.parquet(s"$sf/documents.parquet")
       .select(col("doc_id"), col("text"), col("source"))
@@ -233,37 +232,27 @@ class ScaleOps20Spec extends GraftSuite {
       curation = Curation.Params(minQuality = 0.0, minTokens = 1,
         keepLangs = Seq("en", "es", "de", "fr", "und")),
       packByBpe = true, bpeMerges = 8, ctxTokens = 256L)
-    spark.conf.set("graft.bpe.batchK", "4")
-    val r = try TrainingPipeline.curateToTraining(spark, docs, None,
+    val r = TrainingPipeline.curateToTraining(spark, docs, None,
       cfg = cfg, ledger = false)
-    finally spark.conf.unset("graft.bpe.batchK")
     // the train stage is its own accounting row between split and packing
     assert(r.stages.map(_.stage) == Seq("pair_graph", "curation",
       "decontamination", "mixing", "split", "tokenizer_train", "packing"))
-    // the batched path was ACTUALLY taken: 8 merges at batchK=4 is 2
-    // ideal driver rounds; conflicts may add a few, but sequential's 8
-    // would mean the conf was ignored
+    // the batched path was ACTUALLY taken: 8 merges at batchK=16 is one
+    // ideal driver round; conflicts may add a few, but sequential's 8
+    // would mean the pipeline bypassed the batched trainer
     val rounds = graft.text.Bpe.lastDriverRounds.get()
-    assert(rounds >= 2 && rounds < 8, s"8 merges at batchK=4 took $rounds rounds")
+    assert(rounds >= 1 && rounds < 8, s"8 merges at batchK=16 took $rounds rounds")
     // packs: numbering restarts per (split, source) group and the layout
     // re-derives from the SCALAR greedy encoder over the packed corpus
-    // (same corpus ⇒ deterministic retrain reproduces the merges)
+    // (same corpus and the same trainer the pipeline ran ⇒ deterministic
+    // retrain reproduces the merges)
     val packed = r.packed.select(col("doc_id"), col("split"), col("source"),
         col("text"), col("n_bpe_tokens"), col("pack_id"))
       .collect().map(x => (x.getLong(0), x.getString(1), x.getString(2),
         x.getString(3), x.getLong(4), x.getLong(5)))
     assert(packed.nonEmpty)
-    val merges = graft.text.Bpe.trainSequential(
-      graft.text.Bpe.vocabWords(
-        r.packed.select(col("text")), "text"), 8)
-    spark.conf.set("graft.bpe.batchK", "4")
-    val mergesBatched = try graft.text.Bpe.train(
+    val m = graft.text.Bpe.train(
       graft.text.Bpe.vocabWords(r.packed.select(col("text")), "text"), 8)
-    finally spark.conf.unset("graft.bpe.batchK")
-    // (on this corpus the batch schedule coincides; if a future testdata
-    // refresh makes them diverge, re-derive with the BATCHED merges —
-    // the pipeline trained with batchK=4)
-    val m = if (mergesBatched == merges) merges else mergesBatched
     packed.groupBy(t => (t._2, t._3)).foreach { case (_, rows) =>
       var cum = 0L
       rows.sortBy(_._1).foreach { case (id, _, _, text, nBpe, packId) =>
